@@ -13,11 +13,13 @@ materialized with the ``noop`` sink so we measure engine execution, not
 driver-side row transfer. All progress chatter goes to stderr; stdout is
 exactly the one JSON line.
 
-Methodology change (round 13): after every materialize — the untimed
-warmup included — the query's ``_mrjob_spark_persisted`` release handles
-are dropped, so each timed run recomputes its own persisted
-intermediates instead of hitting the cache the warmup populated
-(VERDICT r12 item 3). Timing loop is otherwise unchanged.
+Cache hygiene: every run -- the untimed warmup included -- builds and
+materializes its query inside one ``mrjob_spark.materialize.scope()``,
+and the scope releases whatever the query persisted or checkpointed
+once the (untimed) run ends. Each timed run therefore recomputes its own
+intermediates instead of hitting the cache the previous run populated
+(VERDICT r12 item 3), and checkpoint blocks do not pile up across the
+session.
 """
 
 from __future__ import annotations
@@ -32,6 +34,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mrjob_spark import queries as _q  # noqa: E402
+from mrjob_spark.materialize import scope  # noqa: E402
 from mrjob_spark.session import get_spark  # noqa: E402
 
 
@@ -65,22 +68,6 @@ def _env_gates() -> dict:
 def _materialize(df) -> None:
     # noop sink: full execution, zero driver-side result transfer.
     df.write.format("noop").mode("overwrite").save()
-
-
-def _release(df) -> None:
-    """Cache hygiene between timed runs (round 13, VERDICT r12 item 3):
-    queries that persist bounded intermediates expose them via the
-    ``_mrjob_spark_persisted`` release handle; dropping the entries after
-    every materialize (warmup included) means each timed run recomputes
-    its own persist instead of silently hitting the cache the untimed
-    warmup populated — Spark's CacheManager matches canonicalized plans,
-    so without this the warmup warms the TIMED runs of the whole
-    minhash/admission family. Methodology note: this makes those
-    families' absolute numbers honestly cache-cold; BASELINE.md §21 was
-    re-recorded once under the new rule."""
-    from mrjob_spark.operators.dedup import unpersist_intermediates
-
-    unpersist_intermediates(df)
 
 
 def main() -> int:
@@ -117,15 +104,17 @@ def main() -> int:
             # footer reads land here, so the timed median reflects steady
             # state (what BASELINE.md §4 recorded) instead of first-run
             # compilation spikes that vary with registry position
-            warm = fn(spark, sf_dir)
-            _materialize(warm)
-            _release(warm)
+            #
+            # One scope per run, closed outside the timer: Spark's
+            # CacheManager matches canonicalized plans, so an entry left
+            # by one run would silently warm the next.
+            with scope():
+                _materialize(fn(spark, sf_dir))
             for i in range(n_runs):
-                t0 = time.monotonic()
-                df = fn(spark, sf_dir)
-                _materialize(df)
-                runs.append(time.monotonic() - t0)
-                _release(df)
+                with scope():
+                    t0 = time.monotonic()
+                    _materialize(fn(spark, sf_dir))
+                    runs.append(time.monotonic() - t0)
             timings[name] = round(statistics.median(runs), 3)
             print(f"[bench] {name}: {timings[name]}s (runs={['%.2f' % r for r in runs]})",
                   file=sys.stderr, flush=True)

@@ -1713,7 +1713,9 @@ class EMRJobRunner(StreamingStepRenderer):
                     texts.append(
                         self._s3_read(uri).decode("utf-8", "replace")
                     )
-            return texts
+            # an empty listing means nothing was delivered yet: keep
+            # waiting (None), unlike an empty but delivered stderr object
+            return texts or None
 
         # container logs also reach the LogUri with delay on real EMR
         texts = self._ssh_container_log_texts()

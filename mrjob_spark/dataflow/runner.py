@@ -34,6 +34,7 @@ from typing import Iterable, Iterator, Optional
 from pyspark.accumulators import AccumulatorParam
 
 from mrjob_spark.dataflow.protocols import crossing
+from mrjob_spark.materialize import materialize, scope
 from mrjob_spark.dataflow.step import (
     GENERIC_ARGS,
     INPUT,
@@ -1206,9 +1207,13 @@ class SparkJobRunner:
             raise
 
     def _run(self):
-        pairs = self.output_pairs()
-        merged_cache = None
+        # the merge barriers below live only as long as the write
+        with scope():
+            self._write(self.output_pairs())
+        self._ran = True
+        return self
 
+    def _write(self, pairs) -> None:
         def merged(lines_rdd):
             """``coalesce(max_output_files)`` with a materialization
             barrier. A bare coalesce(1) narrows the WHOLE upstream
@@ -1219,12 +1224,11 @@ class SparkJobRunner:
             parallelism; the merged write then just concatenates cached
             partitions, preserving their order (repartition(1) would
             scramble it). Spill-safe: post-reduce output, MEMORY_AND_DISK."""
-            nonlocal merged_cache
             from pyspark import StorageLevel
 
-            merged_cache = lines_rdd.persist(StorageLevel.MEMORY_AND_DISK)
-            merged_cache.count()
-            return merged_cache.coalesce(self.max_output_files)
+            return materialize(
+                lines_rdd, StorageLevel.MEMORY_AND_DISK, eager=True
+            ).coalesce(self.max_output_files)
 
         if self.output_dir:
             write = self.job.OUTPUT_PROTOCOL().write
@@ -1261,10 +1265,9 @@ class SparkJobRunner:
                 ).toDF(["key", "value"])
                 if self.max_output_files:
                     # same barrier rationale as merged(); DataFrame form
-                    df = df.persist()
-                    df.count()
-                    merged_cache = df
-                    df = df.coalesce(self.max_output_files)
+                    df = materialize(df, eager=True).coalesce(
+                        self.max_output_files
+                    )
                 writer = df.write.mode("overwrite").partitionBy("key")
                 if self.compression:
                     writer = writer.option("compression", self.compression)
@@ -1274,15 +1277,9 @@ class SparkJobRunner:
             else:
                 lines.saveAsTextFile(self.output_dir)
         else:
+            # runner-lifetime result, released by __exit__
             self._cached = pairs.persist()
             self._cached.count()
-        if merged_cache is not None:
-            try:
-                merged_cache.unpersist()
-            except Exception:
-                pass
-        self._ran = True
-        return self
 
     def cat_output(self) -> Iterator:
         """Yield output ``(key, value)`` pairs. With an ``output_dir``,
@@ -1353,10 +1350,9 @@ class SparkJobRunner:
         return self
 
     def __exit__(self, *exc):
-        cached = getattr(self, "_cached", None)
-        if cached is not None:
+        if getattr(self, "_cached", None) is not None:
             try:
-                cached.unpersist()
+                self._cached.unpersist()
             except Exception:
                 pass
         return False

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from mrjob_spark.operators.similarity import _drop_malformed_vec_rows
+
 #: fixed-point grid: 3 decimal digits (1e-3 resolution)
 FIXED_POINT_SCALE = 1000
 
@@ -104,26 +106,14 @@ def _assign_rows(
 
     def _score(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for b in batches:
+            # null / wrong-dimension vectors drop out of assignment; the
+            # expected dimension is the centroids'
+            b = _drop_malformed_vec_rows(b, "qv", dim)
             if b.num_rows == 0:
                 continue
             qv = b.column("qv")
-            # malformed-row guard (round 13, ADVICE r12): a null or
-            # wrong-dimension vector used to crash the whole job at
-            # reshape; such rows are now dropped from assignment (the
-            # expected dimension is the centroids') — one vectorized
-            # length compare on the fast path, nothing else changes.
-            lens = pc.list_value_length(qv).to_numpy(zero_copy_only=False)
-            lens = np.asarray(lens, dtype=np.float64)
-            good = ~np.isnan(lens) & (lens == dim)
-            if not good.all():
-                keep = pa.array(np.flatnonzero(good))
-                b = b.take(keep)
-                if b.num_rows == 0:
-                    continue
-                qv = b.column("qv")
             n = b.num_rows
             q = np.asarray(qv.flatten(), dtype=np.int64).reshape(n, -1)
             qq = (q * q).sum(axis=1)

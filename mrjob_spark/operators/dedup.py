@@ -15,6 +15,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from mrjob_spark.functions.rounding import rnd
+from mrjob_spark.materialize import materialize, release
 
 from mrjob_spark.functions.hashing import (
     MERSENNE_61,
@@ -287,9 +288,11 @@ def lsh_admission_from_bands(
     # caches nothing bigger than the driver already ships. (The no-cache
     # rule in minhash_lsh_pairs is about CORPUS-sized state; this is the
     # `cand`-style bounded-intermediate precedent.)
-    firsts = bands.groupBy("band_idx", "band_hash").agg(
-        F.min("doc_id").alias("first_id")
-    ).persist()
+    firsts = materialize(
+        bands.groupBy("band_idx", "band_hash").agg(
+            F.min("doc_id").alias("first_id")
+        )
+    )
     batch_keys = firsts.select("band_idx", "band_hash")
     hist_hits = (
         history_bands.select("band_idx", "band_hash")
@@ -313,14 +316,6 @@ def lsh_admission_from_bands(
             .alias("verdict"),
         )
     )
-    # Release handle (the minhash_lsh_pairs precedent at the bottom of
-    # this file): a long-running ingest stream calls this once per
-    # micro-batch, and without a handle each call would strand one
-    # CacheManager entry for the life of the session — bounded size,
-    # unbounded count, the same stranded-block class as graph.py's
-    # superseded-checkpoint leak. Callers release via
-    # unpersist_intermediates(result) after their consuming action.
-    result._mrjob_spark_persisted = [firsts]
     return result
 
 
@@ -364,7 +359,6 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.6,
-    persist_shingles: str | None = None,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs: LSH banding for candidates, exact shingle
@@ -398,10 +392,10 @@ def minhash_lsh_pairs(
       semi-join prunes the corpus first — at scale candidates are a tiny
       fraction, so this avoids re-shingling 100 TB to verify a few GB).
 
-    No ``.cache()`` anywhere (VERDICT r1 flagged the round-1 cache as a
-    100 TB OOM driver); ``persist_shingles='MEMORY_AND_DISK'``/``'DISK_ONLY'``
-    persists the exploded shingle set instead — an explicit, caller-owned
-    choice.
+    No corpus-sized cache anywhere (VERDICT r1 flagged the round-1 cache
+    as a 100 TB OOM driver); only the pair-bounded candidate set and the
+    candidate docs' shingle sets are materialized, in the caller's
+    :func:`~mrjob_spark.materialize.scope`.
     """
     # Hashing dominates this operator (shingles x 64 affine maps), so the
     # input must enter at cluster parallelism: a single-row-group parquet
@@ -421,8 +415,6 @@ def minhash_lsh_pairs(
         F.col(id_col).alias("doc_id"),
         F.explode(char_shingles(F.col(text_col), SHINGLE_N)).alias("shingle"),
     ).select("doc_id", hex_hash32(F.col("shingle")).alias("h"))
-    if persist_shingles:
-        sh = sh.persist(getattr(StorageLevel, persist_shingles))
 
     aggs = [
         F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(MERSENNE_61))).alias(
@@ -486,11 +478,10 @@ def minhash_lsh_pairs(
     # sort-merge join that shuffles the whole corpus, and the operator
     # benched 3.3x slower at sf0.1 (17.0 s vs 5.2 s). Storage is flat
     # across repeated invocations — the CacheManager dedups identical
-    # plans — and :func:`unpersist_intermediates` releases the two entries
+    # plans — and the caller's scope releases the two entries
     # deterministically (VERDICT r2 "what's wrong" #3; asserted in
     # tests/test_operators.py).
-    cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    cand.count()
+    cand = materialize(cand, StorageLevel.MEMORY_AND_DISK, eager=True)
 
     cand_ids = (
         cand.select(F.col("doc_a").alias("cid"))
@@ -506,17 +497,18 @@ def minhash_lsh_pairs(
     # (accurate stats → broadcastable, see ``cand`` above) because both
     # sides of the pair join consume it; bounded by the candidate-doc set,
     # not the corpus.
-    base = (
+    # Eager for the same reason: two join sides consume it.
+    base = materialize(
         cand_docs.select(
             F.col(id_col).alias("doc_id"),
             F.explode(char_shingles(F.col(text_col), SHINGLE_N)).alias("shingle"),
         )
         .select("doc_id", hex_hash32(F.col("shingle")).alias("h"))
         .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .agg(F.collect_set("h").alias("hs")),
+        StorageLevel.MEMORY_AND_DISK,
+        eager=True,
     )
-    base.count()  # eager for the same reason: two join sides consume it
 
     n_inter = F.size(F.array_intersect(F.col("sa.hs"), F.col("sb.hs")))
     jac = rnd(
@@ -530,22 +522,15 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
-    # release handle (VERDICT r2 #4): callers that are done with the result
-    # call unpersist_intermediates(result) to drop the two cache entries.
+    # shim for perfbench/workloads.py, removed together with its readers
     result._mrjob_spark_persisted = [cand, base]
     return result
 
 
 def unpersist_intermediates(df: DataFrame) -> None:
-    """Release the persisted intermediates behind a DataFrame returned by
-    :func:`minhash_lsh_pairs` (no-op for anything else). Safe to call after
-    the caller's consuming action; the result plan stays valid — it just
-    recomputes if re-executed."""
-    for cached in getattr(df, "_mrjob_spark_persisted", []) or []:
-        try:
-            cached.unpersist()
-        except Exception:
-            pass
+    # shim for perfbench/workloads.py, removed together with its readers
+    for x in getattr(df, "_mrjob_spark_persisted", ()):
+        release(x)
 
 
 def sql_minhash_lsh_pairs(
@@ -1286,10 +1271,9 @@ def ivf_embedding_admission(
     # now carrying the arrival's vector — the micro-batch asymmetry this
     # operator leans on), eager count() prevents the racing-stage
     # recompute, and accurate InMemoryRelation stats keep the downstream
-    # joins broadcast. Callers release via unpersist_intermediates(result)
-    # after their consuming action (wired in the streaming twin).
-    ab = ab.persist(StorageLevel.MEMORY_AND_DISK)
-    ab.count()
+    # joins broadcast. The caller's scope releases it (one scope per
+    # micro-batch in the streaming twin).
+    ab = materialize(ab, StorageLevel.MEMORY_AND_DISK, eager=True)
     # rank-1 occupancy is the rn=1 row of the SAME scored pass (stable
     # argsort = the old min(struct(dist, cluster)) winner, no re-score
     # and no exchange): the cell a streamed ingest appends to
@@ -1367,8 +1351,4 @@ def ivf_embedding_admission(
             "hist_top_cosine",
         )
     )
-    # release handle (the lsh_admission_from_bands precedent above): a
-    # long-running ingest stream calls this once per micro-batch;
-    # without a handle each call strands one CacheManager entry.
-    result._mrjob_spark_persisted = [ab]
     return result

@@ -19,12 +19,14 @@ is truncated every round — unbounded lineage is the classic
 iterative-Spark failure mode. The edge plan itself is checkpointed ONCE up
 front, so an expensive upstream (e.g. the whole MinHash-LSH pipeline)
 never re-executes across rounds or across the symmetric union's two
-branches. Superseded checkpoint generations are unpersisted inside the
-loop (``_free_checkpoint_blocks``), so executor block storage is bounded
-by ONE generation regardless of round count — leaving them to the
+branches. Every checkpoint goes through ``mrjob_spark.materialize``:
+superseded generations are released inside the loop, so executor block
+storage is bounded by ONE generation regardless of round count, and the
+final generation belongs to the caller's ``scope()``. Leaving them to the
 ContextCleaner strands a generation per round, which VERDICT r10 measured
-as a 17.8× bench blowup inside a long 7000-stage driver session and which
-would be a real memory ceiling for a deep-diameter CC run at 100 TB.
+as a 17.8× bench blowup inside a long 7000-stage session (170+ queries
+in one SparkContext) and which would be a real memory ceiling for a
+deep-diameter CC run at 100 TB.
 
 Durability: by default rounds use ``localCheckpoint`` (executor block
 storage — fast, but an executor loss mid-job is unrecoverable). Pass
@@ -43,41 +45,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _free_checkpoint_blocks(ck_df: DataFrame) -> None:
-    """Release the executor block storage behind an eagerly
-    ``localCheckpoint``-ed DataFrame.
-
-    ``localCheckpoint`` persists the internal RDD and truncates lineage;
-    the blocks then live until the ContextCleaner GCs the RDD — which in a
-    long session (the driver runs 170+ queries in one SparkContext) lags
-    far behind an iterative operator that strands one generation per
-    round. VERDICT r10 measured exactly that: ``l1_dedup_clusters_capped``
-    read 17.8× its basis inside the driver's 7000-stage session while its
-    uncapped twin (fewer stranded generations relative to work) stayed at
-    1.2×. Explicitly unpersisting the superseded round bounds block
-    storage to O(1) generations — the difference between "works on
-    local[32]" and "works for a 50-round CC job on a 1000-executor
-    cluster".
-
-    The checkpointed RDD is only reachable through the plan's
-    ``LogicalRDD`` node (``Dataset.localCheckpoint`` wraps the persisted
-    internal RDD; the Python-side ``df.rdd`` is a fresh conversion, not
-    the persisted one). Blocking=False: the caller never re-reads a
-    superseded generation, so there is nothing to wait for. Reliably
-    ``checkpoint()``-ed rounds (``checkpoint_dir`` mode) carry
-    StorageLevel NONE and are skipped — their files are owned by the
-    checkpoint dir, not block storage. Best-effort by design: a Spark
-    internals change degrades this to the old ContextCleaner behavior,
-    never to an error.
-    """
-    try:
-        jrdd = ck_df._jdf.queryExecution().analyzed().rdd()
-        lvl = jrdd.getStorageLevel()
-        if lvl.useMemory() or lvl.useDisk():
-            jrdd.unpersist(False)
-    except Exception:  # pragma: no cover - py4j internals drift
-        pass
+from mrjob_spark.materialize import (
+    CHECKPOINT,
+    LOCAL_CHECKPOINT,
+    materialize,
+    release,
+)
 
 
 def connected_components(
@@ -99,16 +72,11 @@ def connected_components(
         rounds (diameter > max_iter — use the star-contraction variant).
     """
     if checkpoint_dir:
-        sc = edges.sparkSession.sparkContext
-        sc.setCheckpointDir(checkpoint_dir)
+        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+    level = CHECKPOINT if checkpoint_dir else LOCAL_CHECKPOINT
 
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-
-    else:
-
-        def ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
+    def ckpt(df: DataFrame) -> DataFrame:
+        return materialize(df, level, eager=True)
 
     # Materialize the (possibly expensive) edge plan exactly once; the
     # symmetric closure below references it twice.
@@ -119,7 +87,7 @@ def connected_components(
     )
     # the one-directional edge set is only an input to ``sym``; once the
     # symmetric closure is materialized its blocks are dead weight
-    _free_checkpoint_blocks(e)
+    release(e)
 
     # Initialization folds in round 1: the symmetric edge set lists every
     # node as ``v`` at least once, so min(own id, min neighbor id) is one
@@ -157,13 +125,15 @@ def connected_components(
         # above), so the previous generation is unreachable from here on:
         # free it now instead of waiting for the ContextCleaner. Block
         # storage stays O(1) generations for any round count.
-        _free_checkpoint_blocks(prev_ck)
+        release(prev_ck)
         prev_ck = new_labels
         if n_changed == 0:
-            _free_checkpoint_blocks(sym)  # the result plan reads only the
-            return labels                 # final checkpoint, not the edges
-    _free_checkpoint_blocks(sym)
-    _free_checkpoint_blocks(prev_ck)
+            # the result plan reads only the final checkpoint, which
+            # the caller's scope frees once the result is consumed
+            release(sym)
+            return labels
+    release(sym)
+    release(prev_ck)
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "
         "graph diameter too large — use star-contraction"

@@ -320,6 +320,7 @@ def hyperplane_lsh_topk(
         cand,
         corpus,
         threshold=-2.0,  # keep every candidate; ranking cuts to top-k
+        dim=dim,
         id_col=id_col,
         vec_col=vec_col,
         a_col=query_id_col,
@@ -832,6 +833,7 @@ def arrow_cosine_verify(
     cand: DataFrame,
     emb: DataFrame,
     threshold: float,
+    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     a_col: str = "id_a",
@@ -868,11 +870,12 @@ def arrow_cosine_verify(
     Edge semantics (fixtures contain none of these): pairs whose cosine
     is NaN (zero-norm or NaN input) are dropped, matching the null
     verdict of ``cosine_similarity``'s zero-norm guard; ids missing from
-    ``emb`` drop their pairs like the inner join they replace.
+    ``emb`` drop their pairs like the inner join they replace, and so do
+    null vectors and vectors whose length is not ``dim`` (the caller's
+    embedding dimension — authoritative, never inferred from the data).
     """
     import numpy as np
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     spark = cand.sparkSession
     p = groups or spark.sparkContext.defaultParallelism
@@ -906,38 +909,17 @@ def arrow_cosine_verify(
                 "cosine": pa.array([], pa.float64()),
             }
         )
-        n = cand_tbl.num_rows
-        if n == 0 or vec_tbl.num_rows == 0:
+        if cand_tbl.num_rows == 0:
+            return empty
+        # malformed vectors drop only their own pairs, exactly like ids
+        # missing from `emb`
+        vec_tbl = _drop_malformed_vec_rows(vec_tbl, "_vec", dim)
+        if vec_tbl.num_rows == 0:
             return empty
         ids = np.asarray(vec_tbl.column("_vid"), dtype=np.int64)
-        emb_col = vec_tbl.column("_vec").combine_chunks()
-        if ids.size == 0:
-            return empty
-        # malformed-row guard (round 13, ADVICE r12): drop only the
-        # null/deviant-length vectors — their pairs vanish exactly like
-        # ids missing from `emb` — instead of returning an empty table
-        # for the WHOLE cogroup, which silently discarded every
-        # well-formed pair sharing the group with one bad row. The
-        # surviving dimension is the group's majority length (ties take
-        # the smaller), the one the fixture contract guarantees unique.
-        lens = pc.list_value_length(emb_col).to_numpy(zero_copy_only=False)
-        lens = np.asarray(lens, dtype=np.float64)
-        present = ~np.isnan(lens)
-        if not present.any():
-            return empty
-        if present.all() and lens.min() == lens.max():
-            pass  # fast path: rectangular, no nulls (the normal case)
-        else:
-            vals, counts = np.unique(lens[present], return_counts=True)
-            dim_len = vals[np.argmax(counts)]
-            keep = np.flatnonzero(present & (lens == dim_len))
-            ids = ids[keep]
-            emb_col = emb_col.take(pa.array(keep))
-            if ids.size == 0:
-                return empty
-        m = np.asarray(emb_col.flatten(), dtype=np.float64).reshape(
-            ids.size, -1
-        )
+        m = np.asarray(
+            vec_tbl.column("_vec").combine_chunks().flatten(), dtype=np.float64
+        ).reshape(ids.size, dim)
         order = np.argsort(ids, kind="stable")
         ids, m = ids[order], m[order]
         # l2_norm's exact order: acc + x*x, left-assoc per dimension

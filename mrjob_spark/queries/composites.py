@@ -1053,15 +1053,9 @@ def l1_dedup_clusters_capped(spark, sf_dir):
         t.documents, "doc_id", "text", threshold=0.6, max_bucket_size=32
     )
     cc = connected_components(pairs, src="doc_a", dst="doc_b")
-    result = cc.select(
+    return cc.select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_rep")
     )
-    # propagate the LSH release handle through the wrapper (round 13
-    # bench cache hygiene — same as l1_dedup_clusters)
-    result._mrjob_spark_persisted = getattr(
-        pairs, "_mrjob_spark_persisted", []
-    )
-    return result
 
 
 # ---------------------------------------------------------------------------
@@ -1206,6 +1200,11 @@ _NEARDUP_IVF_HI_SQL = _sql_neardup_ivf(
 )
 
 
+#: dimension of the fixture embeddings (tools/gen_sf.py), the one the IVF
+#: tiers' verify scores at
+_EMB_DIM = 64
+
+
 def _ivf_neardup_pairs(t, k: int, probe: int, threshold: float,
                        emb=None):
     """Shared body of the IVF near-dup tiers: deterministic fixed-point
@@ -1248,7 +1247,7 @@ def _ivf_neardup_pairs(t, k: int, probe: int, threshold: float,
         .distinct()
     )
     return arrow_cosine_verify(
-        cand, emb_src.select("vec_id", "embedding"), threshold
+        cand, emb_src.select("vec_id", "embedding"), threshold, dim=_EMB_DIM
     )
 
 

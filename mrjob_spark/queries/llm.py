@@ -28,6 +28,7 @@ from mrjob_spark.functions.text import (
     tokens,
     distinct_tokens,
 )
+from mrjob_spark.materialize import LOCAL_CHECKPOINT, materialize, release
 from mrjob_spark.operators.graph import connected_components
 from mrjob_spark.operators.dedup import (
     embedding_neardup_pairs,
@@ -171,16 +172,9 @@ def l1_dedup_clusters(spark, sf_dir):
     t = Tables(spark, sf_dir)
     pairs = minhash_lsh_pairs(t.documents, "doc_id", "text", threshold=0.6)
     cc = connected_components(pairs, src="doc_a", dst="doc_b")
-    result = cc.select(
+    return cc.select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_rep")
     )
-    # propagate the LSH release handle through the wrapper (round 13
-    # bench cache hygiene): the consuming action's owner releases the
-    # entries via dedup.unpersist_intermediates(result)
-    result._mrjob_spark_persisted = getattr(
-        pairs, "_mrjob_spark_persisted", []
-    )
-    return result
 
 
 @query("l2_simhash", sql=sql_simhash_fingerprints())
@@ -2853,11 +2847,13 @@ def l10_ccnet_clean(spark, sf_dir):
     # without this barrier the whole dedup+LM pipeline executed twice
     # (round 12; ~10.2 s -> ~6 s at sf0.1). The checkpointed frame is
     # per-doc-bounded — the same scale class as every broadcast here.
-    scored = (
+    scored = materialize(
         docs.select("doc_id", "lang")
         .join(dedup, "doc_id")
-        .join(ppl, "doc_id")
-    ).localCheckpoint()
+        .join(ppl, "doc_id"),
+        LOCAL_CHECKPOINT,
+        eager=True,
+    )
     thr = scored.groupBy("lang").agg(
         rnd(F.expr("percentile(avg_logp, 0.333333)"), 6).alias("t33"),
         rnd(F.expr("percentile(avg_logp, 0.666667)"), 6).alias("t66"),
@@ -3297,10 +3293,10 @@ def _train_bpe_merges(documents, n_merges: int) -> list:
     except Exception:
         prior_cache_aqe = "false"
     spark.conf.set(_CACHE_AQE, "true")
-    base = words.select(
+    base = materialize(words.select(
         F.trim(F.regexp_replace(F.col("w"), "(.)", "$1 ")).alias("syms"),
         "cnt",
-    ).persist()
+    ))
     state = base
     try:
         merges = []
@@ -3342,7 +3338,7 @@ def _train_bpe_merges(documents, n_merges: int) -> list:
                 "cnt",
             )
     finally:
-        base.unpersist()
+        release(base)
         spark.conf.set(_CACHE_AQE, prior_cache_aqe)
     return merges
 

@@ -750,6 +750,35 @@ def test_step_log_fetch_retries_until_delivery(svc, input_file,
         _ = _gzip  # (body already gzipped by the mock layout)
 
 
+def test_probable_cause_waits_for_container_log_delivery(
+        svc, input_file, monkeypatch):
+    """An empty container-log listing means the logs have not reached the
+    LogUri yet: the fetch must keep waiting, not settle on "no logs" (the
+    empty-but-delivered rule is for the single stderr object only)."""
+    import time as _time
+
+    r = _runner(svc, MRWordFreq(), input_file)
+    r._cluster_id = "j-DELAYED"
+    log = "s3://bucket/logs/j-DELAYED/containers/c_01/stderr"
+    traceback = (
+        "Traceback (most recent call last):\n"
+        '  File "/home/me/my_job.py", line 12, in reducer\n'
+        "    raise ValueError('bad record')\n"
+        "ValueError: bad record\n"
+    )
+    listings = [[], [log]]
+    monkeypatch.setattr(
+        r, "_s3_ls", lambda prefix: listings.pop(0) if listings else [log]
+    )
+    monkeypatch.setattr(r, "_s3_read", lambda uri: traceback.encode())
+    monkeypatch.setattr(_time, "sleep", lambda secs: None)
+    r.check_cluster_every = 0.01
+    cause, excerpt = r._probable_cause("s-1")
+    assert listings == []  # listed twice: empty, then delivered
+    assert cause and cause.startswith("ValueError: bad record")
+    assert "bad record" in excerpt
+
+
 def test_cloud_python_bin_defaults_to_python3(svc, input_file, tmp_path):
     """Task commands execute on cluster nodes where the driver
     machine's sys.executable path doesn't exist; the reference

@@ -444,12 +444,10 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
 def test_minhash_lsh_pairs_storage_flat_and_releasable(spark):
     # VERDICT r2 #4: repeated invocations in a long-lived session must not
     # accrete storage. The CacheManager dedups identical plans (invocation 2
-    # reuses invocation 1's entries), and unpersist_intermediates() releases
+    # reuses invocation 1's entries), and the enclosing scope releases
     # them deterministically.
-    from mrjob_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        unpersist_intermediates,
-    )
+    from mrjob_spark.materialize import scope
+    from mrjob_spark.operators.dedup import minhash_lsh_pairs
 
     def cached_ids():
         info = spark.sparkContext._jsc.sc().getRDDStorageInfo()
@@ -466,16 +464,15 @@ def test_minhash_lsh_pairs_storage_flat_and_releasable(spark):
     # test's invocations, not on the global entry count.
     spark.catalog.clearCache()
     baseline = cached_ids()
-    r1 = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.6)
-    r1.count()
-    new_after_first = cached_ids() - baseline
-    r2 = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.6)
-    r2.count()
-    new_after_second = cached_ids() - baseline
-    # flat: the identical plan hits the same cache entries, adding none
-    assert new_after_second == new_after_first
-    unpersist_intermediates(r1)
-    unpersist_intermediates(r2)
+    with scope():
+        r1 = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.6)
+        r1.count()
+        new_after_first = cached_ids() - baseline
+        r2 = minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.6)
+        r2.count()
+        new_after_second = cached_ids() - baseline
+        # flat: the identical plan hits the same cache entries, adding none
+        assert new_after_second == new_after_first
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -1164,7 +1161,7 @@ def test_arrow_cosine_verify_bit_identical_to_fold(spark, vec_corpus):
     pairs += [(0, 10_000), (10_000, 1)]  # ids absent from the corpus
     cand = spark.createDataFrame(pairs, "id_a long, id_b long")
 
-    got = arrow_cosine_verify(cand, vec_corpus, threshold=-2.0)
+    got = arrow_cosine_verify(cand, vec_corpus, threshold=-2.0, dim=DIM)
     want = _fold_cosine_reference(cand, vec_corpus, threshold=-2.0)
     g = sorted(map(tuple, got.collect()))
     w = sorted(map(tuple, want.collect()))
@@ -1172,7 +1169,8 @@ def test_arrow_cosine_verify_bit_identical_to_fold(spark, vec_corpus):
     assert g == w  # bit-identical cosines, same surviving pairs
 
     # thresholded form agrees too (the production call shape)
-    g5 = sorted(map(tuple, arrow_cosine_verify(cand, vec_corpus, 0.5).collect()))
+    g5 = sorted(map(tuple, arrow_cosine_verify(
+        cand, vec_corpus, 0.5, dim=DIM).collect()))
     w5 = sorted(map(tuple, _fold_cosine_reference(cand, vec_corpus, 0.5).collect()))
     assert g5 == w5 and g5  # non-degenerate: clustered fixture has >=0.5 pairs
 
@@ -1217,10 +1215,36 @@ def test_arrow_cosine_verify_keeps_well_formed_pairs_in_ragged_group(spark):
     )
     # force everything into ONE group so the bad row shares the cogroup
     got = arrow_cosine_verify(
-        cand, emb, threshold=-2.0, groups=1
+        cand, emb, threshold=-2.0, dim=3, groups=1
     ).collect()
     pairs = {(r["id_a"], r["id_b"]): r["cosine"] for r in got}
     assert pairs == {(1, 2): 1.0}  # (1,3) dropped, (1,2) survives
+
+
+def test_arrow_cosine_verify_dimension_is_the_callers_not_the_majority(
+        spark):
+    """The caller's ``dim`` is authoritative: when wrong-dimension rows
+    outnumber the well-formed ones in a cogroup, a majority vote would
+    score the bad rows and drop the good pair."""
+    from pyspark.sql import Row
+
+    from mrjob_spark.operators.similarity import arrow_cosine_verify
+
+    emb = spark.createDataFrame([
+        Row(vec_id=1, embedding=[1.0, 0.0, 0.0]),
+        Row(vec_id=2, embedding=[1.0, 0.0, 0.0]),
+        Row(vec_id=3, embedding=[0.5, 0.5]),  # three wrong-dimension rows
+        Row(vec_id=4, embedding=[0.5, 0.5]),
+        Row(vec_id=5, embedding=[0.6, 0.4]),
+    ])
+    cand = spark.createDataFrame(
+        [Row(id_a=a, id_b=b)
+         for a, b in [(1, 2), (1, 3), (3, 4), (3, 5), (4, 5)]]
+    )
+    got = arrow_cosine_verify(
+        cand, emb, threshold=-2.0, dim=3, groups=1
+    ).collect()
+    assert {(r["id_a"], r["id_b"]): r["cosine"] for r in got} == {(1, 2): 1.0}
 
 
 def test_assign_cells_drops_null_and_ragged_vectors(spark):
@@ -1247,3 +1271,109 @@ def test_assign_cells_drops_null_and_ragged_vectors(spark):
     got = {r["vec_id"]: r["cluster"]
            for r in assign_cells(emb, cents, probe=1).collect()}
     assert got == {1: 0, 4: 1}
+
+
+# ---------------------------------------------------------------------------
+# materialization lifecycle: every persist/checkpoint goes through
+# mrjob_spark.materialize, and a scope frees all of it
+# ---------------------------------------------------------------------------
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _cache_manager_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("name", [
+    "l1_dedup_clusters",
+    "l1_dedup_clusters_capped",
+    "l10_ccnet_clean",
+    "l4_bpe_train",
+    "st12_incremental_neardup",
+    "st13_incremental_embedding_neardup",
+    "l2_minhash_lsh_pairs",
+])
+def test_scope_frees_every_intermediate_of_a_query(spark, sf_dir, name):
+    """Build and noop-write a registry query inside one scope: on exit no
+    persisted RDD or CacheManager entry of its own is left behind,
+    checkpoint generations included."""
+    from mrjob_spark import queries
+    from mrjob_spark.materialize import scope
+
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
+    with scope():
+        queries.queries()[name](spark, sf_dir).write.format(
+            "noop").mode("overwrite").save()
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert _cache_manager_empty(spark)
+
+
+def test_nested_scopes_free_inner_frames_at_inner_exit(spark):
+    from mrjob_spark.materialize import (
+        LOCAL_CHECKPOINT,
+        materialize,
+        scope,
+    )
+
+    df = spark.range(20)
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
+    with scope():
+        outer = materialize(df.where("id % 2 = 0"), eager=True)
+        outer_ck = materialize(df.where("id > 3"), LOCAL_CHECKPOINT, eager=True)
+        live = _persistent_rdd_ids(spark) - before
+        with scope():
+            inner = materialize(df.where("id % 3 = 0"), eager=True)
+            materialize(df.where("id > 5"), LOCAL_CHECKPOINT, eager=True)
+            assert inner.is_cached
+        # the inner frames are gone, the outer ones are untouched
+        assert not inner.is_cached
+        assert outer.is_cached
+        assert _persistent_rdd_ids(spark) - before == live
+        assert outer.count() == 10 and outer_ck.count() == 16
+    assert not outer.is_cached
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert _cache_manager_empty(spark)
+
+
+def test_materialize_without_scope_leaves_the_caller_owning_the_frame(spark):
+    from mrjob_spark.materialize import materialize, release
+
+    df = materialize(spark.range(7).where("id > 1"))
+    assert df.is_cached
+    release(df)
+    release(df)  # a second release is a no-op
+    assert not df.is_cached
+
+
+def test_only_materialize_persists_or_checkpoints():
+    """One mechanism per concern: outside mrjob_spark/materialize.py the
+    package calls no persist / checkpoint / unpersist of its own. The
+    one exception is the job runner's result, which lives as long as
+    the runner (released by its ``__exit__``)."""
+    import ast
+    import pathlib
+
+    banned = {"persist", "localCheckpoint", "checkpoint", "unpersist"}
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mrjob_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == "materialize.py":
+            continue
+        src = path.read_text()
+        lines = src.splitlines()
+        for node in ast.walk(ast.parse(src)):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in banned):
+                continue
+            if (rel == "dataflow/runner.py"
+                    and "self._cached" in lines[node.lineno - 1]):
+                continue
+            offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
+    assert offenders == []
