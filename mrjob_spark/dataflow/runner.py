@@ -1232,10 +1232,6 @@ class SparkJobRunner:
 
         if self.output_dir:
             write = self.job.OUTPUT_PROTOCOL().write
-            lines = pairs.map(lambda kv: write(*kv).decode("utf-8", "replace"))
-            if self.max_output_files:
-                lines = merged(lines)
-
             out_fmt = getattr(self.job, "HADOOP_OUTPUT_FORMAT", None)
             if out_fmt:
                 # S10 generalized: the job names a Hadoop OutputFormat
@@ -1259,10 +1255,12 @@ class SparkJobRunner:
                     valueClass="org.apache.hadoop.io.Text",
                 )
             elif self.partition_output_by_key:
-                # S10: key=<k>/part-* layout via the DataFrame writer.
+                # S10: key=<k>/part-* layout via the DataFrame writer; the
+                # schema is explicit, as inferring it runs a job over the
+                # first partition of the whole pipeline
                 df = pairs.map(
                     lambda kv: (str(kv[0]), write(None, kv[1]).decode("utf-8", "replace"))
-                ).toDF(["key", "value"])
+                ).toDF("key string, value string")
                 if self.max_output_files:
                     # same barrier rationale as merged(); DataFrame form
                     df = materialize(df, eager=True).coalesce(
@@ -1272,10 +1270,16 @@ class SparkJobRunner:
                 if self.compression:
                     writer = writer.option("compression", self.compression)
                 writer.text(self.output_dir)
-            elif self.compression:
-                lines.saveAsTextFile(self.output_dir, _CODECS[self.compression])
             else:
-                lines.saveAsTextFile(self.output_dir)
+                lines = pairs.map(
+                    lambda kv: write(*kv).decode("utf-8", "replace")
+                )
+                if self.max_output_files:
+                    lines = merged(lines)
+                lines.saveAsTextFile(
+                    self.output_dir,
+                    _CODECS[self.compression] if self.compression else None,
+                )
         else:
             # runner-lifetime result, released by __exit__
             self._cached = pairs.persist()

@@ -54,7 +54,10 @@ def hex_hash32(col: Column) -> Column:
 
 
 def minhash_columns(h: Column) -> list[Column]:
-    """The k affine minhash transforms of a 32-bit token hash column."""
+    """The k affine minhash transforms of a 32-bit token hash column --
+    the one Spark definition of the minhash family (the signature
+    operators in ``operators/dedup.py`` build their cached trees from
+    it; :func:`sql_minhash_exprs` is the DuckDB twin)."""
     return [
         F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE_61))
         for a, b in zip(MINHASH_A, MINHASH_B)

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from mrjob_spark.sources import local_frame
+
 __all__ = ["bloom_build", "bloom_filter_maybe"]
 
 #: default bitmap size: 2^20 bits = 16384 longs = 128 KiB of driver state.
@@ -115,8 +117,8 @@ def bloom_filter_maybe(
     here exchanges the probed stream.
     """
     spark = df.sparkSession
-    bloom_row = spark.createDataFrame(
-        [(bitmap,)], "__bloom_words array<bigint>"
+    bloom_row = local_frame(
+        spark, {"__bloom_words": [bitmap]}, "__bloom_words array<bigint>"
     )
     # name the k positions once so each xxhash64 evaluates once per row
     pos_cols = {

@@ -33,9 +33,9 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from mrjob_spark.operators.similarity import _drop_malformed_vec_rows
+from mrjob_spark.sources import local_frame
 
 #: fixed-point grid: 3 decimal digits (1e-3 resolution)
 FIXED_POINT_SCALE = 1000
@@ -170,13 +170,14 @@ def _assign_rows(
 
 
 def _centroids_df(spark: SparkSession, rows: list[tuple[int, list[int]]]) -> DataFrame:
-    schema = StructType(
-        [
-            StructField("cluster", LongType()),
-            StructField("cv", ArrayType(LongType())),
-        ]
+    """The ``(cluster, cv)`` centroid table, driver-local: every
+    :func:`assign_cells` call collects it back, and a local frame does
+    that without a Spark job."""
+    return local_frame(
+        spark,
+        {"cluster": [c for c, _ in rows], "cv": [cv for _, cv in rows]},
+        "cluster long, cv array<bigint>",
     )
-    return spark.createDataFrame(rows, schema)
 
 
 def kmeans_assign(

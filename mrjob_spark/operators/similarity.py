@@ -23,6 +23,7 @@ from mrjob_spark.functions.rounding import rnd
 from pyspark.sql.window import Window
 
 from mrjob_spark.functions.vectors import cosine_similarity
+from mrjob_spark.sources import local_frame
 
 
 def brute_force_topk(
@@ -669,19 +670,6 @@ def _pq_index(c, q, m, d_sub, codebook_k, vec_col, query_id_col):
         .select(_pq_unit_fixed_point(F.col(vec_col)).alias("qv"))
         .collect()
     )
-    from pyspark.sql.types import (
-        ArrayType, IntegerType, LongType, StructField, StructType,
-    )
-
-    cb_schema = StructType([
-        StructField("sub", IntegerType()),
-        StructField("code", IntegerType()),
-        StructField("cw", ArrayType(LongType())),
-    ])
-
-    def _codebook_df(rows):
-        return spark.createDataFrame(rows, cb_schema)
-
     codebook = [
         (s, code, list(r["qv"])[s * d_sub:(s + 1) * d_sub])
         for s in range(m)
@@ -705,7 +693,11 @@ def _pq_index(c, q, m, d_sub, codebook_k, vec_col, query_id_col):
         (s, code, [dims[p] for p in sorted(dims)])
         for (s, code), dims in sorted(means.items())
     ]
-    final_cb = _codebook_df(codebook)
+    final_cb = local_frame(spark, {
+        "sub": [s for s, _, _ in codebook],
+        "code": [code for _, code, _ in codebook],
+        "cw": [cw for _, _, cw in codebook],
+    }, "sub int, code int, cw array<bigint>")
 
     # --- encode the corpus: m small-int codes per vector ---------------
     codes = _pq_corpus_pass(c, codebook, m, d_sub, vec_col, emit="codes")

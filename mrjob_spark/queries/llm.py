@@ -48,6 +48,7 @@ from mrjob_spark.operators.similarity import (
     two_stage_topk,
 )
 from mrjob_spark.queries import Tables, query
+from mrjob_spark.sources import local_frame
 
 # ---------------------------------------------------------------------------
 # L1: exact / normalized dedup
@@ -1050,7 +1051,7 @@ def mr_most_used_word(spark, sf_dir):
     """mr_most_used_word.py:33-77: stopword anti-join + global argmax
     (single-reducer pattern → ungrouped top-1)."""
     t = Tables(spark, sf_dir)
-    stop = spark.createDataFrame([(w,) for w in STOPWORDS], ["word"])
+    stop = local_frame(spark, {"word": list(STOPWORDS)}, "word string")
     return (
         t.documents.select(F.explode(tokens(F.col("text"))).alias("word"))
         .join(F.broadcast(stop), "word", "left_anti")

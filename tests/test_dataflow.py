@@ -339,6 +339,37 @@ def test_partitioned_output_by_key(spark, tmp_path):
     assert subdirs == {"key=a", "key=b", "key=c"}
 
 
+@pytest.mark.parametrize("layout", ["output_format", "by_key"])
+def test_merged_output_runs_the_pipeline_once(spark, tmp_path, layout):
+    """``max_output_files`` merges through ONE materialization barrier.
+    The OutputFormat and partition-by-key writers have their own, so
+    they must not also run the text writer's: that computed the whole
+    pipeline a second time, which counters (accumulators) show."""
+
+    class MRTicked(SparkMRJob):
+        def mapper(self, _, line):
+            self.increment_counter("t", "lines")
+            for w in line.split():
+                yield w[0], w
+
+    opts = {}
+    if layout == "output_format":
+        MRTicked.HADOOP_OUTPUT_FORMAT = (
+            "org.apache.hadoop.mapreduce.lib.output.TextOutputFormat"
+        )
+    else:
+        opts["partition_output_by_key"] = True
+    with MRTicked().make_runner(
+        spark,
+        input_rdd=pair_rdd(spark, LINES),
+        output_dir=str(tmp_path / "out"),
+        max_output_files=1,
+        **opts,
+    ) as r:
+        r.run()
+        assert r.counters() == {"t": {"lines": len(LINES)}}
+
+
 def test_mapper_raw_whole_files(spark, tmp_path):
     """S4: one mapper_raw call per input file, with S5 file attribution."""
     for i, body in enumerate(["alpha beta", "gamma"]):

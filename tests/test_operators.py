@@ -162,6 +162,63 @@ def test_minhash_bucket_cap_drops_hot_family_keeps_rest(spark):
     assert (100, 101) in uncapped  # the family the cap removed is real
 
 
+def test_minhash_band_rows_rebuilds_no_constant_expressions(spark):
+    """The 64 affine-min aggregates and 16 band structs are built once
+    per JVM gateway: a repeated ``minhash_band_rows`` call (one per
+    admission micro-batch) pays only its own plan, not the ~7,000 py4j
+    round trips of rebuilding the constant trees."""
+    from mrjob_spark.operators.dedup import minhash_band_rows
+
+    docs = spark.createDataFrame(
+        [Row(doc_id=1, text="the quick brown fox jumps over the dog")]
+    )
+    minhash_band_rows(docs, "doc_id", "text")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = [0]
+
+    def counting(*a, **k):
+        n[0] += 1
+        return send(*a, **k)
+
+    client.send_command = counting
+    try:
+        minhash_band_rows(docs, "doc_id", "text")
+    finally:
+        client.send_command = send
+    assert n[0] < 2000, n[0]
+
+
+def test_independent_band_row_frames_join_like_the_oracle(spark, duck, sf_dir):
+    """Two ``minhash_band_rows`` frames share the cached expression
+    trees; built over different inputs and joined on the band key, they
+    must pair exactly the documents DuckDB's band CTE pairs (a shared
+    Alias / ExprId would break the join's attribute resolution)."""
+    from mrjob_spark.operators.dedup import (
+        minhash_band_rows,
+        sql_band_rows_cte,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    even = minhash_band_rows(docs.where("doc_id % 2 = 0"), "doc_id", "text")
+    odd = minhash_band_rows(docs.where("doc_id % 2 = 1"), "doc_id", "text")
+    got = {
+        (r[0], r[1])
+        for r in even.alias("a")
+        .join(odd.alias("b"), ["band_idx", "band_hash"])
+        .select("a.doc_id", "b.doc_id")
+        .distinct()
+        .collect()
+    }
+    want = set(duck.execute(
+        "WITH " + sql_band_rows_cte("documents") + """
+        SELECT DISTINCT a.doc_id, b.doc_id
+        FROM bands a JOIN bands b USING (band_idx, band_hash)
+        WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1"""
+    ).fetchall())
+    assert want and got == want
+
+
 def test_simhash_near_dupes_share_fingerprint_bits(spark):
     docs = spark.createDataFrame(
         [
@@ -1271,6 +1328,51 @@ def test_assign_cells_drops_null_and_ragged_vectors(spark):
     got = {r["vec_id"]: r["cluster"]
            for r in assign_cells(emb, cents, probe=1).collect()}
     assert got == {1: 0, 4: 1}
+
+
+def test_assign_cells_reads_its_centroid_table_without_a_job(spark):
+    """The centroid table is a driver-local frame: ``assign_cells``
+    collects it back on every call (twice per admission micro-batch),
+    and that read must start no Spark job."""
+    from mrjob_spark.operators.clustering import _centroids_df, assign_cells
+
+    emb = spark.createDataFrame(
+        [Row(vec_id=1, embedding=[1.0, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    cents = _centroids_df(
+        spark, [(c, [c * 10, 1000 - c]) for c in range(16)]
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("assign_cells_centroid_read", "centroid read")
+    try:
+        assign_cells(emb, cents, probe=2)  # lazy apart from the read
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("assign_cells_centroid_read")
+    assert list(jobs) == []
+
+
+def test_only_local_frame_builds_driver_tables():
+    """One mechanism for driver-built tables: operators and streaming
+    bodies build them through ``sources.local_frame`` (a LocalRelation:
+    no job to read or broadcast), never ``createDataFrame`` over Python
+    rows (a Python-RDD scan whose every read is a job)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "mrjob_spark"
+    offenders = []
+    for sub in ("operators", "streaming"):
+        for path in sorted((pkg / sub).rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "createDataFrame"):
+                    rel = path.relative_to(pkg).as_posix()
+                    offenders.append(f"{rel}:{node.lineno}")
+    assert offenders == []
 
 
 # ---------------------------------------------------------------------------

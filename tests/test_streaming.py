@@ -980,6 +980,64 @@ def test_neardup_ingest_releases_cache_per_microbatch(spark, tmp_path):
     assert after.groupBy("doc_id").count().where("count > 1").count() == 0
 
 
+@pytest.mark.parametrize("kind", ["bands", "cells"])
+def test_ingest_raises_on_an_unreadable_index(spark, tmp_path, kind):
+    """Only a MISSING index reads as empty (the first micro-batch). A
+    corrupt file in an existing index must fail the batch: read as
+    empty, every arrival would be admitted as ``new``."""
+    import os
+
+    from mrjob_spark.streaming.ops import (
+        embedding_ingest_foreach_batch,
+        neardup_ingest_foreach_batch,
+    )
+
+    index_dir = str(tmp_path / "index")
+    out_dir = str(tmp_path / "verdicts")
+    if kind == "bands":
+        write_batch = neardup_ingest_foreach_batch(index_dir, out_dir)
+        batch = spark.createDataFrame(
+            [Row(doc_id=i, text=f"an arriving document {i} " * 6)
+             for i in range(4)]
+        )
+    else:
+        write_batch = embedding_ingest_foreach_batch(
+            index_dir, out_dir, [(0, [1000, 0]), (1, [0, 1000])])
+        batch = spark.createDataFrame(
+            [(i, [1.0, float(i)]) for i in range(4)],
+            "vec_id long, embedding array<float>",
+        )
+    write_batch(batch, 0)  # no index yet: creates it
+    # a garbage file that sorts before every part file; in each cell
+    # directory of the cell index, which is read partition-pruned
+    dirs = [index_dir] if kind == "bands" else [
+        os.path.join(index_dir, d) for d in os.listdir(index_dir)
+        if d.startswith("cluster=")
+    ]
+    for d in dirs:
+        with open(os.path.join(d, "0000-garbage.parquet"), "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        write_batch(batch, 1)
+
+
+def test_embedding_ingest_keys_its_index_by_id_col(spark, tmp_path):
+    """The cell index the embedding ingest appends to is keyed by the
+    caller's ``id_col``, the column admission reads it back by."""
+    from mrjob_spark.streaming.ops import embedding_ingest_foreach_batch
+
+    out_dir = str(tmp_path / "verdicts")
+    write_batch = embedding_ingest_foreach_batch(
+        str(tmp_path / "index"), out_dir, [(0, [1000, 0]), (1, [0, 1000])],
+        id_col="doc_id")
+    for b in range(2):
+        write_batch(spark.createDataFrame(
+            [(b * 10 + i, [1.0, float(i)]) for i in range(3)],
+            "doc_id long, embedding array<float>",
+        ), b)
+    assert spark.read.parquet(out_dir).count() == 6
+
+
 def test_tws_query_survives_a_bare_driver_session(tmp_path):
     """The correctness driver builds its OWN SparkSession (no
     session.get_spark, no PYTHONPATH hook, workers never run
