@@ -1283,7 +1283,10 @@ def ivf_admission_from_cells(
     # rank-1 occupancy (both batch-sized; the vector already rides ab1)
     occ = ab1.select(
         F.col("vec_id").alias("_eid"),
-        "cluster",
+        # renamed: ``probed`` and ``occ`` both derive from ``ab``, so an
+        # unaliased ``cluster == cluster`` is trivially true and only
+        # Spark's self-join auto-resolution made it compare two sides
+        F.col("cluster").alias("_ecluster"),
         F.col("_vec").alias("_evec"),
         F.col("_norm").alias("_enorm"),
     )
@@ -1294,7 +1297,7 @@ def ivf_admission_from_cells(
     batch_hits = (
         probed.join(
             occ,
-            (probed.cluster == occ.cluster)
+            (F.col("cluster") == F.col("_ecluster"))
             & (F.col("_eid") < F.col("vec_id")),
         )
         .where(bcos >= threshold)

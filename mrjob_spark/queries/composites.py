@@ -1043,7 +1043,7 @@ def l1_dedup_clusters_capped(spark, sf_dir):
     candidates dominates, before clustering even starts), so the capped
     edge set is what the 100 TB dedup contract actually runs on. Oracle:
     the same WITH RECURSIVE closure over the identically-capped pair SQL —
-    a divergence in either the cap or the label propagation flips the
+    a divergence in either the cap or the clustering flips the
     hash. The uncapped twin stays registered as the correctness
     baseline."""
     from mrjob_spark.operators.graph import connected_components

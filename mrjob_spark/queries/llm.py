@@ -164,12 +164,14 @@ SELECT node AS doc_id, min(r) AS cluster_rep FROM reach GROUP BY node
        baseline_of="l1_dedup_clusters_capped")
 def l1_dedup_clusters(spark, sf_dir):
     """Duplicate CLUSTERS, not just pairs: connected components of the
-    MinHash-LSH near-dup graph via iterative min-label propagation
-    (operators/graph.py) — the step that turns pair detection into "keep
-    one representative per group" at 100 TB. Genuinely iterative (rounds =
-    graph diameter), yet still oracle-checked: the DuckDB twin is a WITH
-    RECURSIVE transitive closure over the SAME pair SQL, and both engines
-    must land on identical (doc, min-reachable-id) labels."""
+    MinHash-LSH near-dup graph (operators/graph.py) — the step that turns
+    pair detection into "keep one representative per group" at 100 TB. A
+    pair graph of up to a million edges is labeled by a union-find on the
+    driver (one probe job); above that, large-star/small-star rounds take
+    O(log² n) rounds whatever the diameter. Still oracle-checked: the
+    DuckDB twin is a WITH RECURSIVE transitive closure over the SAME pair
+    SQL, and both engines must land on identical (doc, min-reachable-id)
+    labels."""
     t = Tables(spark, sf_dir)
     pairs = minhash_lsh_pairs(t.documents, "doc_id", "text", threshold=0.6)
     cc = connected_components(pairs, src="doc_a", dst="doc_b")

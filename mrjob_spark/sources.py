@@ -95,6 +95,21 @@ def local_frame(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
     return spark.createDataFrame(table)
 
 
+def collect_bounded(df: DataFrame, limit: int) -> "pyarrow.Table | None":
+    """``df``'s rows as a ``pyarrow.Table`` when there are at most
+    ``limit`` of them, else ``None`` -- one action either way.
+
+    The driver-side twin of :func:`local_frame`: an operator that can
+    finish a small input in Python asks for it here and falls back to
+    its distributed plan on ``None``. Collecting ``limit + 1`` rows is
+    what keeps an input above the bound off the driver. The limit may
+    stop reading a partition early, so persist ``df`` first if the
+    fallback reads it again: a persisted partition is computed whole,
+    once."""
+    table = df.limit(limit + 1).toArrow()
+    return table if table.num_rows <= limit else None
+
+
 def write_table(
     df: DataFrame,
     path: str,

@@ -125,14 +125,23 @@ def _union_find_components(edges):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 def test_connected_components_matches_union_find(spark, edges):
-    from mrjob_spark.operators.graph import connected_components
+    # both regimes: the driver union-find (default bound) and the
+    # large-star/small-star rounds (bound forced to 0)
+    from mrjob_spark.operators import graph
 
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df).collect()
-    }
-    assert got == _union_find_components(edges)
+    want = _union_find_components(edges)
+    default = graph._DRIVER_EDGES
+    for bound in (default, 0):
+        graph._DRIVER_EDGES = bound
+        try:
+            got = {
+                r["node"]: r["component"]
+                for r in graph.connected_components(df).collect()
+            }
+        finally:
+            graph._DRIVER_EDGES = default
+        assert got == want, f"_DRIVER_EDGES={bound}"
 
 
 # ---------------------------------------------------------------------------

@@ -17,7 +17,9 @@ from mrjob_spark.dataflow.tunnel import (
 )
 
 SLEEP = [sys.executable, "-c", "import time; time.sleep(30)"]
-DIE = [sys.executable, "-c", "import sys; sys.exit(1)"]
+# a failed bind must be dead inside the 50 ms launch grace: an
+# interpreter's start-up alone can outlast it, a tiny binary cannot
+DIE = ["sh", "-c", "exit 1"]
 
 
 def _tunnel(render, cluster="j-TESTCLUSTER", **kw):
