@@ -101,105 +101,26 @@ from mrjob_spark.queries import composites  # noqa: E402,F401
 # Driver-visibility ordering. The correctness driver differentially checks
 # the first 50 registry entries per round. As of round 4 every registered
 # query has been driver-green at least once (VERDICT r4), so the window's
-# job flips from first-time coverage to FRESHNESS (VERDICT r4 task 2):
-# lead with queries that are new/changed this round, then the queries
-# whose only green dates from rounds 1-2 — those were checked under the
-# pre-environment-shift runtime (BASELINE.md §8 documents engine-behavior
-# drift mid-history), making them the weakest greens on the board — then
-# fill with the r3-era greens that ride the dataflow runner code changed
-# this round. tests/test_registry.py enforces the staleness invariant from
-# the CORRECTNESS_r*.json files themselves. Names listed here but not
-# (yet) registered are ignored, so the list can lead the code.
+# job is FRESHNESS (VERDICT r4 task 2): a query whose latest driver check
+# is 3 or more rounds behind the newest CORRECTNESS_r*.json must be back
+# inside the window, or explicitly queued below.
+# tests/test_registry.py enforces that staleness invariant from the
+# CORRECTNESS files themselves. Names listed here but not (yet) registered
+# are ignored, so the list can lead the code.
 # ---------------------------------------------------------------------------
 
 _DRIVER_PRIORITY = [
-    # ROUND 13 (VERDICT r12 "Next round" item 1): lead with the queries the
-    # round-12 optimizations TOUCHED but the r12 oracle window rotated away
-    # from — their semantic-preservation evidence is repo-internal until the
-    # driver re-checks them. st13 joins the set because round 13 touches its
-    # index-probe path (VERDICT item 5) and its round-12 provenance was a
-    # mid-round feature (VERDICT gate note).
-    "l2_embedding_neardup_tight",
-    "l2_embedding_neardup_planted",
-    "l2_semdedup_prune",
-    "l3_knn_lsh",
-    "l3_knn_ivf_pq",
-    "l10_ccnet_clean",
-    "l4_bpe_train",
-    "l4_bpe_encode",
-    "mr_hadoop_wordfreq",
-    "mr_emr_wordfreq",
-    "mr_dataproc_topword",
-    "x6_spark_script",
-    "x7_jar_step_emr",
-    "st12_incremental_neardup",
-    "mr_emr_reference_differential",
-    "st13_incremental_embedding_neardup",
-    # the full round-12 rotation queue — the 30 r9-greens, the stalest
-    # cohort on the board (horizon: r10 once CORRECTNESS_r12 is the newest
-    # file) — fills the middle, as the r12 queue comment promised
-    "j5_range_join_bucketed",
-    "j7_star_join",
-    "sql1_ansi_interface",
-    "a10_approx_count_distinct",
-    "l4_bpe_token_count",
-    "l4_doc_fingerprint",
-    "l4_ngrams",
-    "l4_tfidf",
-    "l5_lang_id",
-    "l5_text_classifier",
-    "l7_quality_profile",
-    "l8_balanced_sample",
-    "l8_decontaminate",
-    "l8_decontaminate_bloom",
-    "l8_quality_filter",
-    "l8_sequence_packing",
-    "l8_stratified_split",
-    "l8_temperature_mixture",
-    "l8_weighted_mixture",
-    "l9_pii_redaction",
-    "q16_supplier_part_counts",
-    "q9_product_type_profit",
-    "s7_csv_roundtrip",
-    "sql2_correlated_subquery",
-    "u2_except",
-    "u2_intersect",
-    "w1_ranking",
-    "w2_lag_lead",
-    "w3_running_total",
-    "w4_range_frame",
-    # 4 r10-greens that ride code touched THIS round close the window:
-    # l2_embedding_neardup + l2_minhash_lsh_pairs ride the arrow_cosine_
-    # verify ragged-row fix and the bench persist-release hygiene change;
-    # x6_spark_step / x7_jar_step ride the subprocess tier
-    "l2_embedding_neardup",
-    "l2_minhash_lsh_pairs",
-    "x6_spark_step",
-    "x7_jar_step",
-]
-
-
-#: Queries that do NOT fit the current 50-entry driver window. Listing them
-#: here is an explicit acknowledgment, enforced by tests/test_registry.py:
-#: a query may sit beyond the window ONLY if it was driver-green before or
-#: is queued here — so displacement is always a choice, never an accident
-#: (VERDICT r2 "what's wrong" #1). Round 12: the queue is the STRUCTURAL
-#: overflow the registry size forces — 180 queries cycle through a
-#: 50-slot window against a 3-round staleness horizon, so
-#: registry − 3×window = 30 greens must sit out each round (cap 34 with
-#: the +4 slack). The 30 names below are the r9-greens that didn't fit
-#: behind the returning 28 r8-greens and the two new l6 rows:
-#: stable-path queries untouched this round. Round 13: at the current
-#: horizon (r10, with CORRECTNESS_r12 the newest file) every stale green
-#: sits INSIDE the window, so nothing strictly requires queueing; the 34
-#: names below are the r10-greens the 50-slot window cannot also hold,
-#: acknowledged ahead of the horizon advancing when CORRECTNESS_r13
-#: lands. Five r10-greens (f1-f5 scalar micro rows) overflow even the
-#: queue cap and must LEAD the next reshuffle together with this list.
-_ROTATION_QUEUE: list[str] = [
+    # The staleness policy: CORRECTNESS_r13 is the newest file, so the
+    # horizon is r11 and all 39 r10-greens lead — the 34 names the
+    # round-13 queue acknowledged plus the f1-f5 rows that overflowed it.
     "a12_approx_percentiles",
     "j5_range_join",
     "u1_union",
+    "f1_string_funcs",
+    "f2_math_funcs",
+    "f3_conditional",
+    "f4_datetime",
+    "f5_array_funcs",
     "f6_json",
     "f7_hash_funcs",
     "q3_shipping_priority",
@@ -231,7 +152,35 @@ _ROTATION_QUEUE: list[str] = [
     "st10_stream_pipeline",
     "st11_incremental_ingest",
     "s13_bucketed_join",
+    # its docstring promises a driver check EVERY round
+    "mr_emr_reference_differential",
+    # VERDICT r13 item 2's touched-but-unverified names that are not
+    # already stale (the rest of that list leads above)
+    "a1_pricing_summary",
+    "l1_dedup_clusters_capped",
+    "l2_minhash_lsh_capped",
+    "l2_embedding_neardup_ivf",
+    "l2_embedding_neardup_ivf_hi",
+    # touched since r13 (ROADMAP item 5)
+    "l2_minhash_lsh_pairs",
+    "st12_incremental_neardup",
+    "st13_incremental_embedding_neardup",
+    "l3_kmeans_assign",
+    "l3_knn_ivf_pq",
 ]
+
+
+#: Queries that do NOT fit the current 50-entry driver window. Listing them
+#: here is an explicit acknowledgment, enforced by tests/test_registry.py:
+#: a query may sit beyond the window ONLY if it was driver-green before or
+#: is queued here — so displacement is always a choice, never an accident
+#: (VERDICT r2 "what's wrong" #1). The cap is the STRUCTURAL overflow the
+#: registry size forces — N queries cycle through a 50-slot window against
+#: a 3-round horizon, so N − 3×50 greens sit out each round — plus 4
+#: slack. Empty at horizon r11: every stale green is inside the window.
+#: The 40 r11-greens outside it must LEAD the next reshuffle, when
+#: CORRECTNESS_r14 lands and the horizon advances to r12.
+_ROTATION_QUEUE: list[str] = []
 
 
 #: Registration (module) order, preserved before the driver-priority

@@ -12,6 +12,7 @@ multiplies cost at scale, which is exactly why it needs a test.
 from __future__ import annotations
 
 import pytest
+from conftest import missing_reference_file
 
 from mrjob_spark.queries import REGISTRY
 
@@ -914,9 +915,13 @@ def test_registry_wide_no_unlabeled_cartesian_no_rowwise_python(spark):
     # BroadcastNestedLoopJoin is deliberately NOT flagged: every
     # instance in the registry broadcasts a bounded side (1-row corpus
     # stats, a k-row query set, a centroid table), which is linear in
-    # the big side at any scale.
+    # the big side at any scale. A query that executes a file of the
+    # reference tree cannot build its plan where that file is absent; only
+    # such a query is passed over, and only there.
     offenders = {}
     for name, spec in REGISTRY.items():
+        if missing_reference_file(name):
+            continue
         plan = spec.fn(spark, SF_DIR)._jdf.queryExecution() \
             .executedPlan().toString()
         bad = []
