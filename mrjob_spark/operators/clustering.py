@@ -86,12 +86,7 @@ def _assign_rows(
     the ``ORDER BY dist, cluster`` winner), so rank-1 consumers filter
     instead of re-aggregating.
     """
-    import numpy as np
-
-    rows = sorted((int(c), list(cv)) for c, cv in centroid_rows)
-    clusters = np.array([c for c, _ in rows], dtype=np.int64)
-    cmat = np.array([cv for _, cv in rows], dtype=np.int64)
-    cc = (cmat * cmat).sum(axis=1)
+    cents = _centroid_arrays(centroid_rows)
     schema = (
         "vec_id long, qv array<long>, cluster long, dist long"
         if with_qv
@@ -102,71 +97,92 @@ def _assign_rows(
     for name in passthrough:
         schema += ", %s %s" % (name, qdf.schema[name].dataType.simpleString())
 
-    dim = cmat.shape[1] if cmat.ndim == 2 else 0
-
     def _score(batches):
-        import pyarrow as pa
-
         for b in batches:
-            # null / wrong-dimension vectors drop out of assignment; the
-            # expected dimension is the centroids'
-            b = _drop_malformed_vec_rows(b, "qv", dim)
-            if b.num_rows == 0:
-                continue
-            qv = b.column("qv")
-            n = b.num_rows
-            q = np.asarray(qv.flatten(), dtype=np.int64).reshape(n, -1)
-            qq = (q * q).sum(axis=1)
-            dists = qq[:, None] + cc[None, :] - 2 * (q @ cmat.T)
-            vid = np.asarray(b.column("vec_id"), dtype=np.int64)
-            if probe <= 1:
-                j = np.argmin(dists, axis=1)  # first min = lowest cluster
-                cols = {
-                    "vec_id": pa.array(vid, pa.int64()),
-                    "cluster": pa.array(clusters[j], pa.int64()),
-                    "dist": pa.array(dists[np.arange(n), j], pa.int64()),
-                }
-                if with_qv:
-                    cols = {
-                        "vec_id": cols["vec_id"],
-                        "qv": qv,
-                        "cluster": cols["cluster"],
-                        "dist": cols["dist"],
-                    }
-                if with_rank:
-                    cols["rn"] = pa.array(np.ones(n, dtype=np.int32),
-                                          pa.int32())
-                for name in passthrough:
-                    cols[name] = b.column(name)
-                yield pa.record_batch(cols)
-            else:
-                # fewer live centroids than probe (clusters can collapse
-                # on degenerate data): emit what exists, like the
-                # slice(sort_array(...), 1, probe) it replaced
-                order = np.argsort(dists, axis=1, kind="stable")[:, :probe]
-                w = order.shape[1]
-                cols = {
-                    "vec_id": pa.array(np.repeat(vid, w), pa.int64()),
-                    "cluster": pa.array(clusters[order].ravel(), pa.int64()),
-                    "dist": pa.array(
-                        np.take_along_axis(dists, order, axis=1).ravel(),
-                        pa.int64(),
-                    ),
-                }
-                if with_rank:
-                    cols["rn"] = pa.array(
-                        np.tile(np.arange(1, w + 1, dtype=np.int32), n),
-                        pa.int32(),
-                    )
-                if passthrough:
-                    idx = pa.array(np.repeat(np.arange(n), w))
-                    for name in passthrough:
-                        cols[name] = b.column(name).take(idx)
-                yield pa.record_batch(cols)
+            yield _score_cells(b, cents, probe=probe, with_qv=with_qv,
+                               passthrough=passthrough, with_rank=with_rank)
 
     return qdf.select(
         "vec_id", "qv", *[c for c in passthrough]
     ).mapInArrow(_score, schema=schema)
+
+
+def _centroid_arrays(centroid_rows: list[tuple[int, list[int]]]) -> tuple:
+    """``(clusters, cmat, cc)`` of a k-row centroid list for
+    :func:`_score_cells`: the cluster ids ascending, their fixed-point
+    vectors as a ``k × dim`` int64 matrix, and each one's squared norm."""
+    import numpy as np
+
+    rows = sorted((int(c), list(cv)) for c, cv in centroid_rows)
+    clusters = np.array([c for c, _ in rows], dtype=np.int64)
+    cmat = np.array([cv for _, cv in rows], dtype=np.int64)
+    return clusters, cmat, (cmat * cmat).sum(axis=1)
+
+
+def _score_cells(
+    b,
+    cents: tuple,
+    *,
+    probe: int = 1,
+    with_qv: bool = False,
+    passthrough: tuple[str, ...] = (),
+    with_rank: bool = False,
+):
+    """Top-``probe`` cells of the Arrow rows ``vec_id, qv[,
+    *passthrough]`` of ``b`` (a record batch or a table) under
+    :func:`_centroid_arrays` ``cents``, with the columns
+    :func:`_assign_rows` declares, as the same kind of Arrow object.
+    The one scoring code of both the ``mapInArrow`` pass and the
+    streaming admission's driver path (``streaming/ops.py``), so the
+    two can never assign a vector to different cells."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    clusters, cmat, cc = cents
+    dim = cmat.shape[1] if cmat.ndim == 2 else 0
+    # null / wrong-dimension vectors drop out of assignment; the
+    # expected dimension is the centroids'
+    b = _drop_malformed_vec_rows(b, "qv", dim)
+    qv = b.column("qv")
+    n = b.num_rows
+    q = np.asarray(pc.list_flatten(qv), dtype=np.int64).reshape(n, dim)
+    qq = (q * q).sum(axis=1)
+    dists = qq[:, None] + cc[None, :] - 2 * (q @ cmat.T)
+    vid = np.asarray(b.column("vec_id"), dtype=np.int64)
+    if probe <= 1:
+        j = np.argmin(dists, axis=1)  # first min = lowest cluster
+        cols = {"vec_id": pa.array(vid, pa.int64())}
+        if with_qv:
+            cols["qv"] = qv
+        cols["cluster"] = pa.array(clusters[j], pa.int64())
+        cols["dist"] = pa.array(dists[np.arange(n), j], pa.int64())
+        if with_rank:
+            cols["rn"] = pa.array(np.ones(n, dtype=np.int32), pa.int32())
+        for name in passthrough:
+            cols[name] = b.column(name)
+        return type(b).from_pydict(cols)
+    # fewer live centroids than probe (clusters can collapse on
+    # degenerate data): emit what exists, like the
+    # slice(sort_array(...), 1, probe) it replaced
+    order = np.argsort(dists, axis=1, kind="stable")[:, :probe]
+    w = order.shape[1]
+    cols = {
+        "vec_id": pa.array(np.repeat(vid, w), pa.int64()),
+        "cluster": pa.array(clusters[order].ravel(), pa.int64()),
+        "dist": pa.array(
+            np.take_along_axis(dists, order, axis=1).ravel(), pa.int64()
+        ),
+    }
+    if with_rank:
+        cols["rn"] = pa.array(
+            np.tile(np.arange(1, w + 1, dtype=np.int32), n), pa.int32()
+        )
+    if passthrough:
+        idx = pa.array(np.repeat(np.arange(n), w))
+        for name in passthrough:
+            cols[name] = b.column(name).take(idx)
+    return type(b).from_pydict(cols)
 
 
 def _centroids_df(spark: SparkSession, rows: list[tuple[int, list[int]]]) -> DataFrame:

@@ -310,6 +310,41 @@ def lsh_admission_from_bands(
     return result
 
 
+def lsh_admission_local(bands, history):
+    """:func:`lsh_admission_from_bands`'s verdicts computed on the
+    driver, for the streaming ingest's small micro-batches
+    (``streaming/ops.py:neardup_ingest_foreach_batch``). ``bands`` is
+    the batch's collected ``doc_id, band_idx, band_hash`` table and
+    ``history`` the index rows holding any of its band hashes (a
+    ``band_idx, band_hash`` table). Returns the same ``doc_id,
+    verdict`` rows as a ``pyarrow.Table``, under the same rule: a
+    history key makes ``dup_of_history``, else an earlier (smaller)
+    ``doc_id`` sharing a key makes ``dup_in_batch``, else ``new``."""
+    import pyarrow as pa
+
+    def band_keys(t):
+        return list(zip(t.column("band_idx").to_pylist(),
+                        t.column("band_hash").to_pylist()))
+
+    ids = bands.column("doc_id").to_pylist()
+    keys, history_keys = band_keys(bands), set(band_keys(history))
+    first: dict = {}
+    for d, k in zip(ids, keys):
+        if d is not None and not (k in first and first[k] <= d):
+            first[k] = d
+    docs: dict = {}  # doc_id -> verdict, in first-seen order
+    for d, k in zip(ids, keys):
+        v = docs.setdefault(d, "new")
+        if k in history_keys:
+            docs[d] = "dup_of_history"
+        elif v == "new" and d is not None and first.get(k, d) < d:
+            docs[d] = "dup_in_batch"
+    return pa.table({
+        "doc_id": pa.array(list(docs), bands.schema.field("doc_id").type),
+        "verdict": pa.array(list(docs.values()), pa.string()),
+    })
+
+
 def sql_band_rows_cte(source: str = "documents") -> str:
     """DuckDB CTE text computing ``sh(doc_id, h)``, ``sig`` and
     ``bands(doc_id, band_idx, band_hash)`` over ``source`` — mirrors
@@ -1233,7 +1268,7 @@ def ivf_admission_from_cells(
     ``collect()`` below is the first action on it, and it fills the
     cache before the verdict plan runs. The footprint is batch-bounded
     (arrivals × probe rows), and the caller's scope releases it."""
-    from mrjob_spark.functions.vectors import dot, l2_norm
+    from mrjob_spark.functions.vectors import l2_norm
 
     arr = arrivals.select(F.col(id_col).cast("long").alias("vec_id"))
     ab = cells.select(
@@ -1268,10 +1303,7 @@ def ivf_admission_from_cells(
         F.col(id_col).cast("long").alias("_hid"),
         F.col(vec_col).alias("_hvec"),
     ).withColumn("_hnorm", l2_norm(F.col("_hvec")))
-    hcos = rnd(
-        dot(F.col("_vec"), F.col("_hvec")) / (F.col("_norm") * F.col("_hnorm")),
-        6,
-    )
+    hcos = _guarded_cosine("_vec", "_norm", "_hvec", "_hnorm")
     hist_top = (
         idx.join(F.broadcast(probed), "cluster")
         .select("vec_id", hcos.alias("c"))
@@ -1290,10 +1322,7 @@ def ivf_admission_from_cells(
         F.col("_vec").alias("_evec"),
         F.col("_norm").alias("_enorm"),
     )
-    bcos = rnd(
-        dot(F.col("_vec"), F.col("_evec")) / (F.col("_norm") * F.col("_enorm")),
-        6,
-    )
+    bcos = _guarded_cosine("_vec", "_norm", "_evec", "_enorm")
     batch_hits = (
         probed.join(
             occ,
@@ -1322,3 +1351,130 @@ def ivf_admission_from_cells(
         )
     )
     return result
+
+
+def _guarded_cosine(a: str, a_norm: str, b: str, b_norm: str):
+    """``rnd(dot(a, b) / (a_norm * b_norm), 6)``, null when either norm
+    is 0: a zero vector has no direction, and under Spark 4's ANSI
+    default the bare division raises ``DIVIDE_BY_ZERO`` and fails the
+    whole micro-batch (the guard of ``functions/vectors.
+    cosine_similarity``)."""
+    from mrjob_spark.functions.vectors import dot
+
+    den = F.col(a_norm) * F.col(b_norm)
+    return F.when(den > 0, rnd(dot(F.col(a), F.col(b)) / den, 6))
+
+
+def ivf_admission_local(
+    ids: list,
+    cells,
+    index,
+    *,
+    threshold: float = 0.4,
+    vec_col: str = "embedding",
+):
+    """:func:`ivf_admission_from_cells`'s verdicts computed on the
+    driver, for the streaming ingest's small micro-batches
+    (``streaming/ops.py:embedding_ingest_foreach_batch``).
+
+    ``ids`` are every arrival's ``vec_id`` in batch order; ``cells`` is
+    the collected assignment (``vec_id, cluster, dist, rn, <vec_col>``,
+    :func:`clustering._score_cells`); ``index`` holds the index rows of
+    the probed cells (``cluster, <vec_col>``). Returns the same
+    ``vec_id, verdict, hist_top_cosine`` rows as a ``pyarrow.Table``.
+
+    The cosines repeat Spark's arithmetic operation for operation, so
+    ``hist_top_cosine`` and every threshold test agree bit for bit:
+    float products in double, summed left to right from 0.0 as
+    ``aggregate()`` folds them (``np.dot`` and ``np.sum`` reorder the
+    additions), one division by the product of the two norms, then
+    ``floor(x·10⁶ + 0.5)/10⁶``; null where a norm is 0. Index rows of
+    another dimension or with a null vector drop out, as their null
+    Spark cosine does."""
+    import numpy as np
+    import pyarrow as pa
+
+    from mrjob_spark.operators.similarity import _drop_malformed_vec_rows
+
+    cid = cells.column("vec_id").to_pylist()
+    # ids as int64 plus a validity mask: a null id matches nothing
+    cval = np.array([v is not None for v in cid], dtype=bool)
+    cint = np.array([v or 0 for v in cid], dtype=np.int64)
+    ccl = cells.column("cluster").to_numpy()
+    crn = cells.column("rn").to_numpy()
+    cvec = _float_rows(cells, vec_col)
+    cnorm = np.sqrt(_fold(cvec * cvec))
+    index = _drop_malformed_vec_rows(index, vec_col, cvec.shape[1])
+    icl = index.column("cluster").to_numpy()
+    ivec = _float_rows(index, vec_col)
+    inorm = np.sqrt(_fold(ivec * ivec))
+
+    hist: dict = {}
+    batch_hit: set = set()
+    for c in np.unique(ccl):
+        p = np.flatnonzero((ccl == c) & cval)
+        h = np.flatnonzero(icl == c)
+        if h.size:
+            # fmax skips nulls; a row of nulls stays null
+            best = np.fmax.reduce(
+                _cosines(cvec[p], cnorm[p], ivec[h], inorm[h]), axis=1)
+            for i, b in zip(p, best):
+                if b > hist.get(cid[i], -np.inf):  # False for NaN
+                    hist[cid[i]] = float(b)
+        # in-batch: this cell's probes vs its earlier rank-1 occupants
+        o = p[crn[p] == 1]
+        cos = _cosines(cvec[p], cnorm[p], cvec[o], cnorm[o])
+        hit = (cos >= threshold) & (cint[o][None, :] < cint[p][:, None])
+        batch_hit.update(cid[i] for i in p[hit.any(axis=1)])
+
+    tops = [hist.get(v) for v in ids]
+    return pa.table({
+        "vec_id": pa.array(ids, pa.int64()),
+        "verdict": pa.array([
+            "dup_of_history" if t is not None and t >= threshold
+            else "dup_in_batch" if v in batch_hit
+            else "new"
+            for v, t in zip(ids, tops)
+        ], pa.string()),
+        "hist_top_cosine": pa.array(tops, pa.float64()),
+    })
+
+
+def _float_rows(t, vec_col: str):
+    """The equal-length vector column ``vec_col`` of ``t`` as an
+    ``n × dim`` float64 matrix (float32 widens exactly, like Spark's
+    ``cast("double")``)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    if t.num_rows == 0:
+        return np.zeros((0, 0))
+    flat = pc.list_flatten(t.column(vec_col)).to_numpy(zero_copy_only=False)
+    return np.asarray(flat, dtype=np.float64).reshape(t.num_rows, -1)
+
+
+def _fold(x):
+    """Sums over the last axis, added left to right from 0.0 the way
+    Spark's ``aggregate()`` folds an array."""
+    import numpy as np
+
+    if x.shape[-1] == 0:
+        return np.zeros(x.shape[:-1])
+    return np.cumsum(x, axis=-1)[..., -1]
+
+
+def _cosines(a, a_norm, b, b_norm):
+    """:func:`_guarded_cosine` for every row pair of ``a`` (m × dim) and
+    ``b`` (n × dim), NaN for null; blocked over ``a`` so the m × n × dim
+    products stay a few million doubles."""
+    import numpy as np
+
+    out = np.full((len(a), len(b)), np.nan)
+    step = max(1, (1 << 22) // max(1, b.size))
+    for s in range(0, len(a), step):
+        dots = _fold(a[s:s + step, None, :] * b[None, :, :])
+        den = a_norm[s:s + step, None] * b_norm[None, :]
+        ok = den > 0
+        blk = out[s:s + step]
+        blk[ok] = np.floor(dots[ok] / den[ok] * 1e6 + 0.5) / 1e6
+    return out

@@ -72,18 +72,26 @@ def read_hadoop_input_format(
     )
 
 
-def local_frame(spark: SparkSession, columns: dict, schema: str) -> DataFrame:
+def local_frame(
+    spark: SparkSession, columns: "dict | pyarrow.Table", schema: str = ""
+) -> DataFrame:
     """A small driver-built table -- centroids, a codebook, a bloom
-    bitmap, a stopword list -- as an Arrow ``LocalRelation``.
+    bitmap, a stopword list, a micro-batch's verdicts -- as an Arrow
+    ``LocalRelation``.
 
-    ``columns`` maps each field of the DDL ``schema`` to its list of
-    values; a missing field is empty. The rows live in the plan itself,
-    so collecting or broadcasting the frame runs no Spark job.
-    ``createDataFrame`` over Python rows builds a Python-RDD scan
-    instead, and every read of it is a job through a Python worker:
-    building and collecting a 16-row, 64-dim centroid table took a
-    median 678 ms that way against 63 ms here (local[4], 4 vCPUs)."""
+    ``columns`` is either a ``pyarrow.Table`` (its own schema, e.g. one
+    from :func:`collect_bounded`) or a dict mapping each field of the
+    DDL ``schema`` to its list of values; a missing field is empty. The
+    rows live in the plan itself, so collecting or broadcasting the
+    frame runs no Spark job. ``createDataFrame`` over Python rows
+    builds a Python-RDD scan instead, and every read of it is a job
+    through a Python worker: building and collecting a 16-row, 64-dim
+    centroid table took a median 678 ms that way against 63 ms here
+    (local[4], 4 vCPUs)."""
     import pyarrow as pa
+
+    if isinstance(columns, pa.Table):
+        return spark.createDataFrame(columns)
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string
 
@@ -102,10 +110,25 @@ def collect_bounded(df: DataFrame, limit: int) -> "pyarrow.Table | None":
     The driver-side twin of :func:`local_frame`: an operator that can
     finish a small input in Python asks for it here and falls back to
     its distributed plan on ``None``. Collecting ``limit + 1`` rows is
-    what keeps an input above the bound off the driver. The limit may
-    stop reading a partition early, so persist ``df`` first if the
-    fallback reads it again: a persisted partition is computed whole,
-    once."""
+    what keeps an input above the bound off the driver. Two hazards:
+
+    - Bound the SOURCE rows, not a plan derived from them. The limit
+      scans partitions incrementally: one job over the first
+      partition, then rounds over more partitions
+      (``spark.sql.limit.scaleUpFactor``) until it holds ``limit + 1``
+      rows, so over a post-shuffle plan each round is one more job
+      after the shuffle's own. Above the bound the derived plan has
+      then run once for nothing before the fallback runs it again.
+      The streaming admission bounds a micro-batch's documents, not
+      its band rows (16 per document).
+    - Accumulators upstream of the limit under-count. A Python worker
+      whose output the limit stops reading loses its accumulator
+      updates (a counting UDF read through ``limit(1)`` reported 0 of
+      40 rows). Count before an exchange, or count on the fallback.
+
+    The limit may also stop reading a partition early, so persist
+    ``df`` first if the fallback reads it again: a persisted partition
+    is computed whole, once."""
     table = df.limit(limit + 1).toArrow()
     return table if table.num_rows <= limit else None
 

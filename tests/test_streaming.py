@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from mrjob_spark.streaming import ops as streaming_ops
 from mrjob_spark.streaming import (
     read_stream_parquet,
     run_available_now,
@@ -753,6 +754,12 @@ def test_state_partitions_restores_session_setting(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
+#: ``_DRIVER_ARRIVALS`` per admission path: the default bound decides
+#: these small micro-batches on the driver, a bound of 0 forces the
+#: distributed operators
+INGEST_PATHS = {"driver": streaming_ops._DRIVER_ARRIVALS, "distributed": 0}
+
+
 def _write_docs(spark, path, rows):
     spark.createDataFrame(
         [Row(ts=ts, doc_id=i, text=t) for ts, i, t in rows]
@@ -848,14 +855,15 @@ def test_lsh_band_admission_verdict_classes(spark):
 
 
 def test_neardup_ingest_across_microbatches_converges_to_batch_twin(
-        spark, tmp_path):
+        spark, tmp_path, monkeypatch):
     """The REAL streamed form of st12: three doc_id-ordered micro-batches
     through readStream → foreachBatch(neardup_ingest_foreach_batch) with
     the band index growing as a parquet table. The streamed ADMITTED set
     must equal the one-shot batch twin's (labels may differ: a cross-
     micro-batch near-dup reads dup_of_history in the stream — the earlier
     arrival's bands are already in the index — where the one-shot twin
-    says dup_in_batch; rejection itself is order-invariant)."""
+    says dup_in_batch; rejection itself is order-invariant). Both
+    admission paths (INGEST_PATHS) run the stream."""
     import os
     import time
 
@@ -899,30 +907,6 @@ def test_neardup_ingest_across_microbatches_converges_to_batch_twin(
         )
         os.utime(path, (now + i, now + i))
 
-    index_dir = str(tmp_path / "band_index")
-    out_dir = str(tmp_path / "verdicts")
-    # seed the index with the ingested corpus's bands (st12's history)
-    minhash_band_rows(history_docs, "doc_id", "text").write.parquet(
-        index_dir)
-
-    sdf = read_stream_parquet(
-        spark, src, schema="doc_id long, text string",
-        max_files_per_trigger=1,
-    )
-    q = (
-        sdf.writeStream.foreachBatch(
-            neardup_ingest_foreach_batch(index_dir, out_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    streamed = spark.read.parquet(out_dir)
-    assert streamed.select("batch_id").distinct().count() == 3
-    streamed_admitted = {
-        r["doc_id"] for r in streamed.where("verdict = 'new'").collect()
-    }
     twin = lsh_band_admission(
         docs.where("doc_id % 10 = 9"),
         minhash_band_rows(history_docs, "doc_id", "text").select(
@@ -931,12 +915,39 @@ def test_neardup_ingest_across_microbatches_converges_to_batch_twin(
     twin_admitted = {
         r["doc_id"] for r in twin.where("verdict = 'new'").collect()
     }
-    assert streamed_admitted == twin_admitted
-    # every arrival got exactly one verdict
-    assert streamed.count() == len(arrivals)
+    for path, bound in INGEST_PATHS.items():
+        monkeypatch.setattr(streaming_ops, "_DRIVER_ARRIVALS", bound)
+        index_dir = str(tmp_path / path / "band_index")
+        out_dir = str(tmp_path / path / "verdicts")
+        # seed the index with the ingested corpus's bands (st12's history)
+        minhash_band_rows(history_docs, "doc_id", "text").write.parquet(
+            index_dir)
+
+        sdf = read_stream_parquet(
+            spark, src, schema="doc_id long, text string",
+            max_files_per_trigger=1,
+        )
+        q = (
+            sdf.writeStream.foreachBatch(
+                neardup_ingest_foreach_batch(index_dir, out_dir))
+            .option("checkpointLocation", str(tmp_path / path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+        streamed = spark.read.parquet(out_dir)
+        assert streamed.select("batch_id").distinct().count() == 3, path
+        streamed_admitted = {
+            r["doc_id"] for r in streamed.where("verdict = 'new'").collect()
+        }
+        assert streamed_admitted == twin_admitted, path
+        # every arrival got exactly one verdict
+        assert streamed.count() == len(arrivals), path
 
 
-def test_neardup_ingest_releases_cache_per_microbatch(spark, tmp_path):
+def test_neardup_ingest_releases_cache_per_microbatch(
+        spark, tmp_path, monkeypatch):
     """VERDICT r11 "what's wrong": lsh_admission_from_bands persists its
     first-arrival aggregate, and a long-running ingest stream invokes it
     once per micro-batch — without a release path the stream strands one
@@ -944,47 +955,55 @@ def test_neardup_ingest_releases_cache_per_microbatch(spark, tmp_path):
     stranded-block class). Drive the foreachBatch body directly over 3
     micro-batches and assert storage returns to baseline after each one;
     then replay a batch and assert the verdict sink stays
-    one-verdict-per-arrival (dynamic partition overwrite, not append)."""
+    one-verdict-per-arrival (dynamic partition overwrite, not append).
+    Both admission paths (INGEST_PATHS)."""
     from pyspark.sql import Row
 
     from mrjob_spark.streaming.ops import neardup_ingest_foreach_batch
 
-    index_dir = str(tmp_path / "band_index")
-    out_dir = str(tmp_path / "verdicts")
-    write_batch = neardup_ingest_foreach_batch(index_dir, out_dir)
+    for path, bound in INGEST_PATHS.items():
+        monkeypatch.setattr(streaming_ops, "_DRIVER_ARRIVALS", bound)
+        index_dir = str(tmp_path / path / "band_index")
+        out_dir = str(tmp_path / path / "verdicts")
+        write_batch = neardup_ingest_foreach_batch(index_dir, out_dir)
 
-    spark.catalog.clearCache()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    for b in range(3):
-        batch = spark.createDataFrame(
-            [Row(doc_id=b * 10 + i,
-                 text=f"micro batch doc {b * 10 + i} " * 6)
+        spark.catalog.clearCache()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        for b in range(3):
+            batch = spark.createDataFrame(
+                [Row(doc_id=b * 10 + i,
+                     text=f"micro batch doc {b * 10 + i} " * 6)
+                 for i in range(4)]
+            )
+            write_batch(batch, b)
+            # bands AND the operator-internal firsts aggregate released
+            assert spark._jsparkSession.sharedState().cacheManager(
+            ).isEmpty(), path
+
+        before = spark.read.parquet(out_dir)
+        n_before = before.count()
+        assert n_before == 12, path
+        # replay batch 1 (redelivery after a crash between sink write
+        # and offset commit): its partition is overwritten, never
+        # appended
+        replay = spark.createDataFrame(
+            [Row(doc_id=10 + i, text=f"micro batch doc {10 + i} " * 6)
              for i in range(4)]
         )
-        write_batch(batch, b)
-        # bands AND the operator-internal firsts aggregate both released
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-    before = spark.read.parquet(out_dir)
-    n_before = before.count()
-    assert n_before == 12
-    # replay batch 1 (redelivery after a crash between sink write and
-    # offset commit): its partition is overwritten, never appended
-    replay = spark.createDataFrame(
-        [Row(doc_id=10 + i, text=f"micro batch doc {10 + i} " * 6)
-         for i in range(4)]
-    )
-    write_batch(replay, 1)
-    after = spark.read.parquet(out_dir)
-    assert after.count() == n_before
-    assert after.groupBy("doc_id").count().where("count > 1").count() == 0
+        write_batch(replay, 1)
+        after = spark.read.parquet(out_dir)
+        assert after.count() == n_before, path
+        assert after.groupBy("doc_id").count().where(
+            "count > 1").count() == 0, path
 
 
 @pytest.mark.parametrize("kind", ["bands", "cells"])
-def test_ingest_raises_on_an_unreadable_index(spark, tmp_path, kind):
+def test_ingest_raises_on_an_unreadable_index(
+        spark, tmp_path, monkeypatch, kind):
     """Only a MISSING index reads as empty (the first micro-batch). A
     corrupt file in an existing index must fail the batch: read as
-    empty, every arrival would be admitted as ``new``."""
+    empty, every arrival would be admitted as ``new``. Both admission
+    paths (INGEST_PATHS)."""
     import os
 
     from mrjob_spark.streaming.ops import (
@@ -992,33 +1011,35 @@ def test_ingest_raises_on_an_unreadable_index(spark, tmp_path, kind):
         neardup_ingest_foreach_batch,
     )
 
-    index_dir = str(tmp_path / "index")
-    out_dir = str(tmp_path / "verdicts")
-    if kind == "bands":
-        write_batch = neardup_ingest_foreach_batch(index_dir, out_dir)
-        batch = spark.createDataFrame(
-            [Row(doc_id=i, text=f"an arriving document {i} " * 6)
-             for i in range(4)]
-        )
-    else:
-        write_batch = embedding_ingest_foreach_batch(
-            index_dir, out_dir, [(0, [1000, 0]), (1, [0, 1000])])
-        batch = spark.createDataFrame(
-            [(i, [1.0, float(i)]) for i in range(4)],
-            "vec_id long, embedding array<float>",
-        )
-    write_batch(batch, 0)  # no index yet: creates it
-    # a garbage file that sorts before every part file; in each cell
-    # directory of the cell index, which is read partition-pruned
-    dirs = [index_dir] if kind == "bands" else [
-        os.path.join(index_dir, d) for d in os.listdir(index_dir)
-        if d.startswith("cluster=")
-    ]
-    for d in dirs:
-        with open(os.path.join(d, "0000-garbage.parquet"), "wb") as f:
-            f.write(b"not a parquet file")
-    with pytest.raises(Exception):
-        write_batch(batch, 1)
+    for path, bound in INGEST_PATHS.items():
+        monkeypatch.setattr(streaming_ops, "_DRIVER_ARRIVALS", bound)
+        index_dir = str(tmp_path / path / "index")
+        out_dir = str(tmp_path / path / "verdicts")
+        if kind == "bands":
+            write_batch = neardup_ingest_foreach_batch(index_dir, out_dir)
+            batch = spark.createDataFrame(
+                [Row(doc_id=i, text=f"an arriving document {i} " * 6)
+                 for i in range(4)]
+            )
+        else:
+            write_batch = embedding_ingest_foreach_batch(
+                index_dir, out_dir, [(0, [1000, 0]), (1, [0, 1000])])
+            batch = spark.createDataFrame(
+                [(i, [1.0, float(i)]) for i in range(4)],
+                "vec_id long, embedding array<float>",
+            )
+        write_batch(batch, 0)  # no index yet: creates it
+        # a garbage file that sorts before every part file; in each cell
+        # directory of the cell index, which is read partition-pruned
+        dirs = [index_dir] if kind == "bands" else [
+            os.path.join(index_dir, d) for d in os.listdir(index_dir)
+            if d.startswith("cluster=")
+        ]
+        for d in dirs:
+            with open(os.path.join(d, "0000-garbage.parquet"), "wb") as f:
+                f.write(b"not a parquet file")
+        with pytest.raises(Exception):
+            write_batch(batch, 1)
 
 
 def test_embedding_ingest_keys_its_index_by_id_col(spark, tmp_path):
@@ -1070,7 +1091,7 @@ print("TWS_ROWS=%d" % len(df.collect()))
 
 
 def test_embedding_ingest_across_microbatches_converges_to_batch_twin(
-        spark, tmp_path):
+        spark, tmp_path, monkeypatch):
     """The REAL streamed form of st13: three id-ordered micro-batches of
     embedding arrivals through readStream →
     foreachBatch(embedding_ingest_foreach_batch) with the IVF cell index
@@ -1079,7 +1100,8 @@ def test_embedding_ingest_across_microbatches_converges_to_batch_twin(
     twin's (labels may differ: a cross-micro-batch near-dup reads
     dup_of_history in the stream where the twin says dup_in_batch;
     rejection itself is order-invariant), and the per-micro-batch cache
-    footprint must return to baseline (the st12 persist-leak lesson)."""
+    footprint must return to baseline (the st12 persist-leak lesson).
+    Both admission paths (INGEST_PATHS) run the stream."""
     import os
     import time
 
@@ -1123,41 +1145,6 @@ def test_embedding_ingest_across_microbatches_converges_to_batch_twin(
         )
         os.utime(path, (now + i, now + i))
 
-    index_dir = str(tmp_path / "cell_index")
-    out_dir = str(tmp_path / "verdicts")
-    # seed the index with the ingested corpus's rank-1 cells, in the
-    # operator's declared at-scale layout: PARTITIONED BY CLUSTER (the
-    # ingest's per-batch appends use the same layout, and admission's
-    # probed-cell pre-filter partition-prunes it — round 13)
-    (
-        assign_cells(history, cents, probe=1, passthrough=("embedding",))
-        .select("cluster", "vec_id", "embedding")
-        .write.partitionBy("cluster")
-        .parquet(index_dir)
-    )
-
-    spark.catalog.clearCache()
-    sdf = read_stream_parquet(
-        spark, src, schema="vec_id long, embedding array<float>",
-        max_files_per_trigger=1,
-    )
-    q = (
-        sdf.writeStream.foreachBatch(
-            embedding_ingest_foreach_batch(
-                index_dir, out_dir, centroid_rows, probe=2, threshold=0.4))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # batch + any operator-internal persists all released
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-    streamed = spark.read.parquet(out_dir)
-    assert streamed.select("batch_id").distinct().count() == 3
-    streamed_admitted = {
-        r["vec_id"] for r in streamed.where("verdict = 'new'").collect()
-    }
     index = (
         assign_cells(history, cents, probe=1)
         .select("vec_id", "cluster")
@@ -1170,17 +1157,182 @@ def test_embedding_ingest_across_microbatches_converges_to_batch_twin(
     twin_admitted = {
         r["vec_id"] for r in twin.where("verdict = 'new'").collect()
     }
-    assert streamed_admitted == twin_admitted
-    # every arrival got exactly one verdict; replaying batch 1 must not
-    # change that (dynamic partition overwrite, not append)
-    assert streamed.count() == len(arrivals)
-    wb = embedding_ingest_foreach_batch(
-        index_dir, out_dir, centroid_rows, probe=2, threshold=0.4)
-    replay = spark.createDataFrame(
-        [(r["vec_id"], list(r["embedding"])) for r in chunks[1]],
-        "vec_id long, embedding array<float>",
+    for path, bound in INGEST_PATHS.items():
+        monkeypatch.setattr(streaming_ops, "_DRIVER_ARRIVALS", bound)
+        index_dir = str(tmp_path / path / "cell_index")
+        out_dir = str(tmp_path / path / "verdicts")
+        # seed the index with the ingested corpus's rank-1 cells, in the
+        # operator's declared at-scale layout: PARTITIONED BY CLUSTER
+        # (the ingest's per-batch appends use the same layout, and
+        # admission's probed-cell pre-filter partition-prunes it)
+        (
+            assign_cells(history, cents, probe=1, passthrough=("embedding",))
+            .select("cluster", "vec_id", "embedding")
+            .write.partitionBy("cluster")
+            .parquet(index_dir)
+        )
+
+        spark.catalog.clearCache()
+        sdf = read_stream_parquet(
+            spark, src, schema="vec_id long, embedding array<float>",
+            max_files_per_trigger=1,
+        )
+        q = (
+            sdf.writeStream.foreachBatch(
+                embedding_ingest_foreach_batch(
+                    index_dir, out_dir, centroid_rows, probe=2,
+                    threshold=0.4))
+            .option("checkpointLocation", str(tmp_path / path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        # batch + any operator-internal persists all released
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+        streamed = spark.read.parquet(out_dir)
+        assert streamed.select("batch_id").distinct().count() == 3, path
+        streamed_admitted = {
+            r["vec_id"] for r in streamed.where("verdict = 'new'").collect()
+        }
+        assert streamed_admitted == twin_admitted, path
+        # every arrival got exactly one verdict; replaying batch 1 must
+        # not change that (dynamic partition overwrite, not append)
+        assert streamed.count() == len(arrivals), path
+        wb = embedding_ingest_foreach_batch(
+            index_dir, out_dir, centroid_rows, probe=2, threshold=0.4)
+        replay = spark.createDataFrame(
+            [(r["vec_id"], list(r["embedding"])) for r in chunks[1]],
+            "vec_id long, embedding array<float>",
+        )
+        wb(replay, 1)
+        after = spark.read.parquet(out_dir)
+        assert after.count() == len(arrivals), path
+        assert after.groupBy("vec_id").count().where(
+            "count > 1").count() == 0, path
+
+
+@pytest.mark.parametrize("path", INGEST_PATHS)
+def test_embedding_ingest_admits_a_zero_norm_vector(
+        spark, tmp_path, monkeypatch, path):
+    """A zero vector has no direction: its cosine with anything is null,
+    so it matches nothing and is admitted, and it is never the match of
+    a later arrival. Under Spark's ANSI default an unguarded cosine
+    raised DIVIDE_BY_ZERO and failed the whole micro-batch."""
+    from mrjob_spark.streaming.ops import embedding_ingest_foreach_batch
+
+    monkeypatch.setattr(streaming_ops, "_DRIVER_ARRIVALS", INGEST_PATHS[path])
+    out_dir = str(tmp_path / "verdicts")
+    write_batch = embedding_ingest_foreach_batch(
+        str(tmp_path / "index"), out_dir, [(0, [1000, 0]), (1, [0, 1000])])
+    schema = "vec_id long, embedding array<float>"
+    write_batch(spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [1.0, 0.01])], schema), 0)
+    write_batch(spark.createDataFrame(
+        [(4, [0.0, 0.0]), (5, [2.0, 0.0])], schema), 1)
+    got = {
+        r["vec_id"]: (r["verdict"], r["hist_top_cosine"])
+        for r in spark.read.parquet(out_dir).collect()
+    }
+    assert got == {
+        1: ("new", None),
+        2: ("new", None),
+        3: ("dup_in_batch", None),
+        4: ("new", None),  # its only history candidates are null
+        5: ("dup_of_history", 1.0),
+    }
+
+
+def _admit_one_micro_batch(spark, tmp_path, sf_dir, kind, name):
+    """Run the ``kind`` ingest body once under ``tmp_path / name`` over
+    an index seeded with the sf fixture's history (ids % 10 != 9) and a
+    micro-batch of its first 8 arrivals and a copy of each, read from
+    one parquet file like a file-source micro-batch. The job group
+    ``name`` tags every Spark job of the body. Returns ``(verdict
+    rows, index rows)``."""
+    from mrjob_spark.operators.clustering import assign_cells, kmeans_fit
+    from mrjob_spark.operators.dedup import minhash_band_rows
+    from mrjob_spark.streaming.ops import (
+        embedding_ingest_foreach_batch,
+        neardup_ingest_foreach_batch,
     )
-    wb(replay, 1)
-    after = spark.read.parquet(out_dir)
-    assert after.count() == len(arrivals)
-    assert after.groupBy("vec_id").count().where("count > 1").count() == 0
+
+    index_dir = str(tmp_path / name / "index")
+    out_dir = str(tmp_path / name / "verdicts")
+    if kind == "bands":
+        src = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            "doc_id", "text")
+        key = "doc_id"
+        minhash_band_rows(
+            src.where("doc_id % 10 != 9"), "doc_id", "text"
+        ).write.parquet(index_dir)
+        body = neardup_ingest_foreach_batch(index_dir, out_dir)
+    else:
+        src = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            "vec_id", "embedding")
+        key = "vec_id"
+        history = src.where("vec_id % 10 != 9")
+        cents = kmeans_fit(history, k=8, iters=1)
+        (
+            assign_cells(history, cents, probe=1, passthrough=("embedding",))
+            .select("cluster", "vec_id", "embedding")
+            .write.partitionBy("cluster").parquet(index_dir)
+        )
+        body = embedding_ingest_foreach_batch(
+            index_dir, out_dir,
+            [(int(r["cluster"]), list(r["cv"])) for r in cents.collect()],
+            # below the fixture's typical top cosine (0.33-0.42), so
+            # arrivals hit both the history and each other
+            probe=2, threshold=0.3)
+    batch_path = str(tmp_path / name / "batch.parquet")
+    arrivals = src.where(f"{key} % 10 = 9").orderBy(key).limit(8)
+    # and a later copy of each, an in-batch duplicate
+    arrivals.unionByName(arrivals.withColumn(key, F.col(key) + 10_000)) \
+        .coalesce(1).write.parquet(batch_path)
+    batch = spark.read.parquet(batch_path)
+
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        body(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    verdicts = sorted(
+        tuple(r) for r in spark.read.parquet(out_dir).collect())
+    index = spark.read.parquet(index_dir)
+    return verdicts, sorted(
+        tuple(r) for r in index.select(*sorted(index.columns)).collect())
+
+
+@pytest.mark.parametrize("kind", ["bands", "cells"])
+def test_ingest_paths_agree_row_for_row(
+        spark, tmp_path, monkeypatch, sf_dir, kind):
+    """The driver path's verdicts are the distributed operators' row
+    for row — ``hist_top_cosine`` included, to the last bit — and so
+    is the index after the append."""
+    got = {}
+    for path, bound in INGEST_PATHS.items():
+        monkeypatch.setattr(streaming_ops, "_DRIVER_ARRIVALS", bound)
+        got[path] = _admit_one_micro_batch(
+            spark, tmp_path, sf_dir, kind, f"agree_{kind}_{path}")
+    verdicts, index = got["driver"]
+    assert len(verdicts) == 16
+    # not vacuous: the fixture's arrivals hit the index and each other
+    assert {r[1] for r in verdicts} == {
+        "new", "dup_of_history", "dup_in_batch"}
+    assert verdicts == got["distributed"][0]
+    assert index == got["distributed"][1]
+
+
+@pytest.mark.parametrize("kind", ["bands", "cells"])
+def test_ingest_runs_at_most_six_jobs_per_micro_batch(
+        spark, tmp_path, sf_dir, kind):
+    """A small micro-batch is decided on the driver: one bounded
+    collect, one index probe and two writes (plus the band rows'
+    shuffle on the near-dup path), at most six Spark jobs. The
+    distributed operators ran 15 (bands) and 14 (cells)."""
+    name = f"ingest_jobs_{kind}"
+    _admit_one_micro_batch(spark, tmp_path, sf_dir, kind, name)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(name)
+    assert 0 < len(jobs) <= 6, len(jobs)
