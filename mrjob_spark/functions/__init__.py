@@ -6,7 +6,7 @@ Everything here returns Spark ``Column`` expressions built from
 whole-stage codegen — no Python UDFs in any hot path.
 """
 
-from mrjob_spark.functions.hashing import hex_hash64, hex_hash32, minhash_columns  # noqa: F401
+from mrjob_spark.functions.hashing import hex_hash64, hex_hash32  # noqa: F401
 from mrjob_spark.functions.text import (  # noqa: F401
     tokens,
     distinct_tokens,

@@ -53,17 +53,6 @@ def hex_hash32(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("bigint")
 
 
-def minhash_columns(h: Column) -> list[Column]:
-    """The k affine minhash transforms of a 32-bit token hash column --
-    the one Spark definition of the minhash family (the signature
-    operators in ``operators/dedup.py`` build their cached trees from
-    it; :func:`sql_minhash_exprs` is the DuckDB twin)."""
-    return [
-        F.pmod(F.lit(a) * h + F.lit(b), F.lit(MERSENNE_61))
-        for a, b in zip(MINHASH_A, MINHASH_B)
-    ]
-
-
 def sql_hex_hash64(expr: str) -> str:
     """DuckDB SQL equivalent of :func:`hex_hash64`."""
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
@@ -75,7 +64,8 @@ def sql_hex_hash32(expr: str) -> str:
 
 
 def sql_minhash_exprs(h_expr: str) -> list[str]:
-    """DuckDB SQL equivalents of :func:`minhash_columns`."""
+    """The k affine minhash transforms of a 32-bit token hash, in DuckDB
+    SQL (``operators/dedup.py:minhash_arrow`` is the engine's kernel)."""
     return [
         f"(({a} * {h_expr} + {b}) % {MERSENNE_61})"
         for a, b in zip(MINHASH_A, MINHASH_B)

@@ -33,3 +33,14 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     vectors can never rank as neighbors on any similarity path."""
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot(a, b) / denom)
+
+
+def sql_cosine(a: str, b: str) -> str:
+    """DuckDB SQL twin of :func:`cosine_similarity` over two ``DOUBLE[]``
+    expressions: NULL unless both norms are > 0. DuckDB's
+    ``list_cosine_similarity`` alone gives −1.0 for a zero vector."""
+    return (
+        f"(CASE WHEN list_dot_product({a}, {a}) > 0"
+        f" AND list_dot_product({b}, {b}) > 0"
+        f" THEN list_cosine_similarity({a}, {b}) END)"
+    )

@@ -1,10 +1,11 @@
 """Deduplication operators (SURVEY.md §2.11 L1/L2): exact, normalized,
 MinHash+LSH, SimHash, exact n-gram Jaccard, embedding-cosine near-dup.
 
-All are pure DataFrame compositions — hashing is md5-based (engine-portable,
-see functions/hashing.py) and every shuffle is on a key whose cardinality
-scales with the data (shingle hash, band hash, label bucket), never an
-all-pairs cross join. The LSH path is the 100 TB design: candidate
+All are DataFrame compositions — MinHash's per-document math is one
+numpy kernel in a ``mapInArrow`` (:func:`minhash_arrow`), hashing is
+md5-based (engine-portable, see functions/hashing.py) and every shuffle
+is on a key whose cardinality scales with the data (shingle hash, band
+hash, label bucket), never an all-pairs cross join. The LSH path is the 100 TB design: candidate
 generation cost is O(docs x bands), verification touches only colliding
 pairs.
 """
@@ -12,21 +13,24 @@ pairs.
 from __future__ import annotations
 
 import functools
+import re
 
-from pyspark import SparkContext, StorageLevel
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from mrjob_spark.functions.rounding import rnd
 from mrjob_spark.materialize import materialize, release
 
 from mrjob_spark.functions.hashing import (
+    MERSENNE_61,
+    MINHASH_A,
+    MINHASH_B,
+    NUM_MINHASHES,
     hex_hash32,
-    minhash_columns,
     sql_hex_hash32,
     sql_minhash_exprs,
 )
 from mrjob_spark.functions.text import (
-    char_shingles,
     distinct_tokens,
     normalize_text,
     sql_normalize_text,
@@ -126,74 +130,174 @@ NUM_BANDS = 16
 ROWS_PER_BAND = 4  # NUM_BANDS * ROWS_PER_BAND == NUM_MINHASHES
 
 
-def _minhash_trees():
-    """The constant expression trees of the MinHash signature: the
-    ``NUM_MINHASHES`` ``min(affine map of h)`` aggregates over a column
-    ``h`` (the affine maps are :func:`~mrjob_spark.functions.hashing.
-    minhash_columns`), and the NUM_BANDS ``named_struct(band_idx,
-    band_hash)`` array over the m0..m63 signature columns (one md5 per
-    band over its ROWS_PER_BAND minhash values).
+#: shingles hashed and folded per numpy step: bounds the kernel's working
+#: set (a NUM_MINHASHES x _CHUNK uint64 matrix, 8 MiB) even inside one huge
+#: document
+_CHUNK = 1 << 14
 
-    Built once per JVM gateway, not per call: building them takes ~7,000
-    py4j round trips (about 1 s of driver time), which every admission
-    micro-batch used to pay before running a job. A new gateway gets its
-    own trees. The trees carry no ``Alias`` (an Alias holds an ExprId
-    that two plans must not share): callers name the aggregates
-    positionally with ``toDF`` and alias the band explode themselves."""
-    return _minhash_trees_for(SparkContext._gateway)
+#: SQL ``lower`` is the simple one-to-one case mapping; Python's
+#: ``str.lower`` is the full one, which differs on exactly two code points:
+#: U+0130 lowers to two code points, and a word-final capital sigma to ς
+_SIMPLE_LOWER = str.maketrans({"\u0130": "i", "\u03a3": "\u03c3"})
 
-
-@functools.lru_cache(maxsize=1)
-def _minhash_trees_for(gateway) -> tuple:
-    mins = tuple(F.min(m) for m in minhash_columns(F.col("h")))
-    bands = F.array(*[
-        F.named_struct(
-            F.lit("band_idx"), F.lit(b),
-            F.lit("band_hash"), F.md5(F.concat_ws("-", *[
-                F.col(f"m{b * ROWS_PER_BAND + r}").cast("string")
-                for r in range(ROWS_PER_BAND)
-            ])),
-        )
-        for b in range(NUM_BANDS)
-    ])
-    return mins, bands
+#: runs of text that SQL ``lower`` lowers: all but the 43 capitals that
+#: Unicode 14 added, which the SQL engine's Unicode 13 case tables leave
+#: as they are and Python's lower
+_LOWERED_RUN = re.compile(
+    "[^\u2c2f\ua7c0\ua7c7\ua7c9\ua7d0\ua7d6\ua7d8\ua7f5"
+    "\U00010570-\U0001057a\U0001057c-\U0001058a\U0001058c-\U00010592"
+    "\U00010594\U00010595]+")
 
 
-def _signatures(d: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """``doc_id, m0..m63`` over 8-char shingles of an already
-    scan-parallelized frame: explode + 64 map-side-combined
-    min-aggregates (whole-stage codegen) rather than the interpreted
-    higher-order ``array_min``/``transform`` lambdas (2.5x at sf0.1).
-    ``min`` is duplicate-insensitive, so no shingle dedup; a document
-    with null text has no signature row."""
-    mins, _ = _minhash_trees()
-    sh = d.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(char_shingles(F.col(text_col), SHINGLE_N)).alias("shingle"),
-    ).select("doc_id", hex_hash32(F.col("shingle")).alias("h"))
-    return sh.groupBy("doc_id").agg(*mins).toDF(
-        "doc_id", *[f"m{i}" for i in range(len(mins))]
-    )
+@functools.cache
+def _md5():
+    """CPython's own md5 where it is built in: the same digests as
+    ``hashlib.md5``, about twice as fast on an 8-byte shingle."""
+    try:
+        from _md5 import md5
+    except ImportError:
+        from hashlib import md5
+    return md5
 
 
-def _band_rows(d: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """``(doc_id, band_idx, band_hash)`` over an already scan-parallelized
-    frame. Shared by :func:`minhash_lsh_pairs` and
-    :func:`minhash_band_rows` so the pair path and the band-index path
-    can never disagree on bucketing."""
-    _, bands = _minhash_trees()
-    return _signatures(d, id_col, text_col).select(
-        "doc_id", F.explode(bands).alias("band")
-    ).select("doc_id", "band.band_idx", "band.band_hash")
+def _shingle_hashes(text: str):
+    """``hex_hash32`` of every SHINGLE_N-char shingle of ``lower(text)``,
+    in shingle order, as uint64 arrays of at most :data:`_CHUNK`. A text
+    shorter than SHINGLE_N is its one truncated shingle (``''`` too),
+    as SQL's ``substr`` gives. ASCII text is sliced as bytes; any other
+    text by code point, each shingle then encoded as UTF-8."""
+    import numpy as np
+
+    md5 = _md5()
+    if text.isascii():
+        t = text.lower().encode()
+    else:
+        t = _LOWERED_RUN.sub(lambda m: m.group().lower(),
+                             text.translate(_SIMPLE_LOWER))
+    n = max(len(t) - SHINGLE_N + 1, 1)
+    for lo in range(0, n, _CHUNK):
+        span = range(lo, min(lo + _CHUNK, n))
+        if isinstance(t, bytes):
+            digests = [md5(t[i:i + SHINGLE_N]).digest() for i in span]
+        else:
+            digests = [md5(t[i:i + SHINGLE_N].encode()).digest() for i in span]
+        # the first 4 of each digest's 16 bytes, big-endian: hex_hash32
+        yield np.frombuffer(b"".join(digests), ">u4")[::4].astype(np.uint64)
+
+
+@functools.cache
+def _affine_maps():
+    """MINHASH_A and MINHASH_B as ``NUM_MINHASHES x 1`` uint64 columns."""
+    import numpy as np
+
+    a = np.array(MINHASH_A, np.uint64)[:, None]
+    b = np.array(MINHASH_B, np.uint64)[:, None]
+    a.flags.writeable = b.flags.writeable = False
+    return a, b
+
+
+def _fold_signature(h, sig) -> None:
+    """``sig[i] = min(sig[i], min over h of (a_i·h + b_i) mod P)`` in
+    place, P = 2⁶¹−1, all uint64. With h < 2³², a_i < 2³⁰ and b_i < 2²⁸,
+    x = a_i·h + b_i < 2P, so x mod P is x or x − P, whichever is smaller
+    in wrapping arithmetic (x − P wraps above x when x < P). A minimum
+    over both choices is the minimum of two row minima."""
+    import numpy as np
+
+    a, b = _affine_maps()
+    x = a * h
+    x += b
+    np.minimum(sig, x.min(axis=1), out=sig)
+    x -= np.uint64(MERSENNE_61)
+    np.minimum(sig, x.min(axis=1), out=sig)
+
+
+def minhash_arrow(batch, out: str):
+    """The one MinHash kernel, per document over Arrow: ``batch`` is a
+    record batch or table whose first column is the document id and
+    whose second is its text. ``out`` picks what it returns, as the
+    same kind of Arrow object:
+
+    - ``"bands"``: ``doc_id, band_idx, band_hash``, NUM_BANDS rows per
+      document; a band hash is the md5 of its ROWS_PER_BAND minhashes
+      joined with '-' in decimal;
+    - ``"signatures"``: ``doc_id, m0..m63``;
+    - ``"sets"``: ``doc_id, hs``, the sorted distinct shingle hashes.
+
+    A null text still gets its row(s): all-null minhashes, NUM_BANDS
+    bands of ``md5('')`` and an empty set, as in the SQL twin
+    (:func:`sql_band_rows_cte`). The streaming admission relies on it:
+    every arrival needs a verdict. Bit for bit the SQL twin's shingles,
+    affine maps and band md5s. Each row is one document, so a repeated
+    id gets one signature per row, not one over the union."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids, texts = batch.column(0), batch.column(1).to_pylist()
+    n = len(texts)
+    if out == "sets":
+        sets = [
+            np.unique(np.concatenate(list(_shingle_hashes(t))))
+            .astype(np.int64) if t is not None else np.empty(0, np.int64)
+            for t in texts
+        ]
+        offsets = np.cumsum([0] + [len(s) for s in sets], dtype=np.int32)
+        hs = pa.ListArray.from_arrays(
+            offsets, np.concatenate(sets) if sets else np.empty(0, np.int64))
+        return type(batch).from_arrays([ids, hs], names=["doc_id", "hs"])
+    sig = np.full((n, NUM_MINHASHES), MERSENNE_61, np.uint64)
+    for d, t in enumerate(texts):
+        if t is not None:
+            for h in _shingle_hashes(t):
+                _fold_signature(h, sig[d])
+    null = np.array([t is None for t in texts], bool)
+    if out == "signatures":
+        cols = [pa.array(m, pa.int64(), mask=null)
+                for m in np.ascontiguousarray(sig.T, np.int64)]
+        return type(batch).from_arrays(
+            [ids, *cols],
+            names=["doc_id", *[f"m{i}" for i in range(NUM_MINHASHES)]])
+    md5 = _md5()
+    no_text = [md5(b"").hexdigest()] * NUM_BANDS
+    band_hash = []
+    for d, s in enumerate(sig.tolist()):
+        band_hash += no_text if null[d] else [
+            md5("-".join(map(str, s[k:k + ROWS_PER_BAND])).encode()).hexdigest()
+            for k in range(0, NUM_MINHASHES, ROWS_PER_BAND)
+        ]
+    return type(batch).from_arrays([
+        ids.take(np.repeat(np.arange(n), NUM_BANDS)),
+        pa.array(np.tile(np.arange(NUM_BANDS, dtype=np.int32), n)),
+        pa.array(band_hash, pa.string()),
+    ], names=["doc_id", "band_idx", "band_hash"])
+
+
+def _minhash_frame(df: DataFrame, id_col: str, text_col: str, out: str):
+    """:func:`minhash_arrow` over ``df``'s ``id_col, text_col`` in one
+    ``mapInArrow``: each document's signature is computed in its own
+    task, so no shuffle."""
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = {
+        "bands": "band_idx int, band_hash string",
+        "signatures": ", ".join(f"m{i} bigint" for i in range(NUM_MINHASHES)),
+        "sets": "hs array<bigint>",
+    }[out]
+
+    def kernel(batches):
+        for b in batches:
+            yield minhash_arrow(b, out)
+
+    return df.select(id_col, text_col).mapInArrow(
+        kernel, f"doc_id {id_type}, {schema}")
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """doc_id + m0..m63 minhash columns over 8-char shingles."""
     from mrjob_spark.operators.partitioning import parallelize_narrow_scan
 
-    return _signatures(
-        parallelize_narrow_scan(df.select(id_col, text_col)), id_col, text_col
-    )
+    return _minhash_frame(
+        parallelize_narrow_scan(df.select(id_col, text_col)),
+        id_col, text_col, "signatures")
 
 
 def minhash_band_rows(
@@ -205,20 +309,17 @@ def minhash_band_rows(
     they share a (band_idx, band_hash) key, so admission checks are key
     lookups, never pair joins.
 
-    Computation takes ``minhash_lsh_pairs``'s signature route, for its
-    two measured reasons: ``parallelize_narrow_scan`` first (a single-file
-    corpus otherwise runs the whole shingle stage on ONE core — 11.2 s →
-    1.6 s at sf0.1), then :func:`_signatures`' explode + min-aggregates.
-    The one shuffle this costs carries ≤ one 64-column row per document
-    per input partition — partial aggregation collapses the shingle
-    stream before anything crosses the wire. The expression trees come
-    from :func:`_minhash_trees`, so a repeated call (one per admission
-    micro-batch) builds only the per-call plan."""
+    ``parallelize_narrow_scan`` first (a single-file corpus otherwise
+    hashes on ONE core — 11.2 s → 1.6 s at sf0.1), then
+    :func:`minhash_arrow` per document in one ``mapInArrow``: no
+    shuffle, and the same kernel as :func:`minhash_lsh_pairs` and the
+    streaming admission's driver path, so none of them can disagree on
+    bucketing."""
     from mrjob_spark.operators.partitioning import parallelize_narrow_scan
 
-    return _band_rows(
-        parallelize_narrow_scan(df.select(id_col, text_col)), id_col, text_col
-    )
+    return _minhash_frame(
+        parallelize_narrow_scan(df.select(id_col, text_col)),
+        id_col, text_col, "bands")
 
 
 def lsh_band_admission(
@@ -403,19 +504,21 @@ def minhash_lsh_pairs(
     still pair through any of their other ``NUM_BANDS - 1`` bands, so only
     pairs whose EVERY colliding band is hot are lost.
 
-    Shuffles: shingle distinct, signature groupBy, band self-join, candidate
-    verification join — all on scalable keys. No cross join anywhere.
+    Shuffles: band bucket grouping, candidate verification join — all on
+    scalable keys. No cross join anywhere.
 
-    Plan shape, chosen by measurement at sf0.1 (BASELINE.md §4):
+    Plan shape:
 
-    * signatures via exploded shingles + ``groupBy(64 min-aggs)`` — these
-      stay inside whole-stage codegen (per-row ``array_min`` higher-order
-      functions benched 6x slower: HOFs are interpreted per element);
-    * candidate generation via one banding explode + band-bucket self-join;
-    * verification via ``array_intersect`` over per-doc shingle-hash arrays
-      computed ONLY for documents that appear in some candidate pair (a
-      semi-join prunes the corpus first — at scale candidates are a tiny
-      fraction, so this avoids re-shingling 100 TB to verify a few GB).
+    * band rows per document from :func:`minhash_arrow` in one
+      ``mapInArrow``: no shuffle and no generated JVM code to warm up;
+    * candidate generation via one band-bucket grouping;
+    * verification via ``array_intersect`` over per-doc shingle-hash sets
+      from the same kernel, computed ONLY for documents that appear in
+      some candidate pair (a semi-join prunes the corpus first — at scale
+      candidates are a tiny fraction, so this avoids re-shingling 100 TB
+      to verify a few GB). A pair of null-text documents shares all its
+      ``md5('')`` bands but has empty sets: its Jaccard is null and the
+      pair is dropped, as in the SQL twin.
 
     No corpus-sized cache anywhere (VERDICT r1 flagged the round-1 cache
     as a 100 TB OOM driver); only the pair-bounded candidate set and the
@@ -430,10 +533,7 @@ def minhash_lsh_pairs(
     from mrjob_spark.operators.partitioning import parallelize_narrow_scan
 
     df = parallelize_narrow_scan(df.select(id_col, text_col))
-
-    # signatures skip shingle dedup (min() is duplicate-insensitive); set
-    # sizes for verification come from the per-doc sets below
-    bands = _band_rows(df, id_col, text_col)
+    bands = _minhash_frame(df, id_col, text_col, "bands")
 
     # Candidate pairs per LSH bucket WITHOUT a self-join: a band self-join
     # re-executes the whole shingle->signature pipeline for each side
@@ -468,7 +568,7 @@ def minhash_lsh_pairs(
 
     # The candidate set feeds both the verification join and the corpus
     # prune below; materializing it stops Spark re-executing the whole
-    # shingle→sig→band pipeline for each consumer. Unlike the full shingle
+    # hashing pipeline for each consumer. Unlike the full shingle
     # set (round 1's cache, flagged in VERDICT), candidates are bounded by
     # the number of colliding PAIRS — a tiny spill-safe footprint at any
     # corpus size.
@@ -498,31 +598,21 @@ def minhash_lsh_pairs(
     cand_docs = df.join(
         cand_ids, F.col(id_col) == F.col("cid"), "left_semi"
     )
-    # Shingle-hash sets for verification via explode + collect_set — the
-    # whole-stage-codegen path (the per-row HOF transform variant is
-    # interpreted per element and benched 4x slower at sf0.1). Persisted
-    # (accurate stats → broadcastable, see ``cand`` above) because both
-    # sides of the pair join consume it; bounded by the candidate-doc set,
-    # not the corpus.
-    # Eager for the same reason: two join sides consume it.
+    # Shingle-hash sets for verification, per document from the kernel.
+    # Persisted (accurate stats → broadcastable, see ``cand`` above) and
+    # eager because both sides of the pair join consume it; bounded by
+    # the candidate-doc set, not the corpus.
     base = materialize(
-        cand_docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(char_shingles(F.col(text_col), SHINGLE_N)).alias("shingle"),
-        )
-        .select("doc_id", hex_hash32(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs")),
+        _minhash_frame(cand_docs, id_col, text_col, "sets"),
         StorageLevel.MEMORY_AND_DISK,
         eager=True,
     )
 
     n_inter = F.size(F.array_intersect(F.col("sa.hs"), F.col("sb.hs")))
-    jac = rnd(
-        n_inter.cast("double")
-        / (F.size(F.col("sa.hs")) + F.size(F.col("sb.hs")) - n_inter),
-        6,
-    )
+    union = F.size(F.col("sa.hs")) + F.size(F.col("sb.hs")) - n_inter
+    # two null-text documents share their md5('') bands with empty sets:
+    # 0/0, which ANSI mode raises on, so such a pair gets no Jaccard
+    jac = F.when(union > 0, rnd(n_inter.cast("double") / union, 6))
     result = (
         cand.join(base.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
         .join(base.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))

@@ -590,6 +590,7 @@ def l2_minhash_lsh_capped(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 from mrjob_spark.functions.rounding import sql_dsum, sql_rnd  # noqa: E402
+from mrjob_spark.functions.vectors import sql_cosine  # noqa: E402
 
 
 @query(
@@ -1126,6 +1127,8 @@ def _sql_neardup_ivf(seed_sql: str, probe: int, threshold: float = 0.4,
     sf-adaptive tier (k=⌈n/125⌉, probe=4, threshold 0.5), and the
     planted high-similarity tier (``source_cte`` unions deterministic
     perturbed twins into ``source``) share one audited template."""
+    cosine = sql_rnd(sql_cosine("CAST(ea.embedding AS DOUBLE[])",
+                                "CAST(eb.embedding AS DOUBLE[])"), 6)
     return f"""
     WITH {source_cte}q AS (
         SELECT vec_id,
@@ -1171,13 +1174,11 @@ def _sql_neardup_ivf(seed_sql: str, probe: int, threshold: float = 0.4,
           ON x.cluster = y.cluster AND x.vec_id < y.vec_id
     )
     SELECT id_a, id_b,
-           (floor((list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-                                          CAST(eb.embedding AS DOUBLE[]))) * 1000000 + 0.5) / 1000000) AS cosine
+           {cosine} AS cosine
     FROM cand
     JOIN {source} ea ON ea.vec_id = id_a
     JOIN {source} eb ON eb.vec_id = id_b
-    WHERE (floor((list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-                                         CAST(eb.embedding AS DOUBLE[]))) * 1000000 + 0.5) / 1000000) >= {threshold}
+    WHERE {cosine} >= {threshold}
 """
 
 

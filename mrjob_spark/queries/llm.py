@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from mrjob_spark.functions.rounding import davg, dsum, rnd, sql_davg, sql_dsum, sql_rnd
+from mrjob_spark.functions.vectors import sql_cosine
 
 from mrjob_spark.functions.hashing import (
     hex_hash32,
@@ -197,11 +198,11 @@ def l2_jaccard_pairs(spark, sf_dir):
 @query(
     "l2_embedding_neardup",
     baseline_of="l2_embedding_neardup_ivf_hi",
-    sql="""
+    sql=f"""
     WITH scored AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               (floor((list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                            CAST(b.embedding AS DOUBLE[]))) * 1000000 + 0.5) / 1000000) AS cosine
+               {sql_rnd(sql_cosine("CAST(a.embedding AS DOUBLE[])",
+                                   "CAST(b.embedding AS DOUBLE[])"), 6)} AS cosine
         FROM embeddings a
         JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
     )
@@ -217,13 +218,13 @@ def l2_embedding_neardup(spark, sf_dir):
 # L3: similarity search
 # ---------------------------------------------------------------------------
 
-_TOPK_SQL_TEMPLATE = """
+_TOPK_SQL_TEMPLATE = f"""
     WITH scored AS (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-               (floor((list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                            CAST(c.embedding AS DOUBLE[]))) * 1000000 + 0.5) / 1000000) AS cosine
+               {sql_rnd(sql_cosine("CAST(q.embedding AS DOUBLE[])",
+                                   "CAST(c.embedding AS DOUBLE[])"), 6)} AS cosine
         FROM embeddings q
-        JOIN embeddings c ON {join_cond} AND q.vec_id <> c.vec_id
+        JOIN embeddings c ON {{join_cond}} AND q.vec_id <> c.vec_id
         WHERE q.vec_id < 10
     )
     SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (
@@ -2520,7 +2521,7 @@ _TWO_STAGE_SQL = f"""
     ), coarse AS (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                q.dv AS qdv, c.dv AS cdv,
-               {sql_rnd('list_cosine_similarity(q.dv[1:16], c.dv[1:16])', 6)}
+               {sql_rnd(sql_cosine('q.dv[1:16]', 'c.dv[1:16]'), 6)}
                    AS coarse_cos
         FROM qs q JOIN c ON q.vec_id <> c.vec_id
     ), cand AS (
@@ -2532,7 +2533,7 @@ _TWO_STAGE_SQL = f"""
         WHERE crn <= 20
     ), exact AS (
         SELECT query_id, neighbor_id,
-               {sql_rnd('list_cosine_similarity(qdv, cdv)', 6)} AS cosine
+               {sql_rnd(sql_cosine('qdv', 'cdv'), 6)} AS cosine
         FROM cand
     )
     SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM (

@@ -12,7 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mrjob_spark.functions.rounding import rnd, dsum
+from mrjob_spark.functions.rounding import rnd, dsum, sql_rnd
+from mrjob_spark.functions.vectors import sql_cosine
 from mrjob_spark.queries import Tables, query
 from mrjob_spark.streaming import session_window_agg, stream_dedup, tumbling_window_agg
 
@@ -596,10 +597,8 @@ def _st13_sql(probe: int = 2, threshold: float = 0.4) -> str:
     SAME centroids, history-hit max cosine + earlier-arrival rank-1
     occupancy hits, rnd6-portable cosines throughout — every centroid,
     every assignment, and every verdict must agree with Spark."""
-    cos = (
-        "(floor((list_cosine_similarity(CAST({a}.embedding AS DOUBLE[]),"
-        " CAST({b}.embedding AS DOUBLE[]))) * 1000000 + 0.5) / 1000000)"
-    )
+    cos = sql_rnd(sql_cosine("CAST({a}.embedding AS DOUBLE[])",
+                             "CAST({b}.embedding AS DOUBLE[])"), 6)
     return f"""
     WITH q AS (
         SELECT vec_id,

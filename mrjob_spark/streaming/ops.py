@@ -278,14 +278,14 @@ def neardup_ingest_foreach_batch(
     Two regimes, picked per micro-batch by one bounded collect of its
     documents (``sources.collect_bounded``, :data:`_DRIVER_ARRIVALS`):
 
-    - **Driver** (the common small micro-batch). The collected documents
-      become a local frame whose band rows ``minhash_band_rows``
-      computes — the one hashing code of both regimes — and collects
-      (at most NUM_BANDS rows per document). The index is probed ONCE
-      with a pushed-down ``band_hash`` IN-list read, the verdicts are
-      decided in Python (``dedup.lsh_admission_local``), and the
-      verdicts and the index append are each written from one local
-      frame: six Spark jobs per micro-batch instead of fifteen.
+    - **Driver** (the common small micro-batch). The collected
+      documents' band rows come from ``dedup.minhash_arrow`` on the
+      collected table itself — the one hashing kernel of both regimes
+      — with no Spark job. The index is probed ONCE with a pushed-down
+      ``band_hash`` IN-list read, the verdicts are decided in Python
+      (``dedup.lsh_admission_local``), and the verdicts and the index
+      append are each written from one local frame: four Spark jobs
+      per micro-batch instead of fifteen.
     - **Distributed** (above the bound). The band rows are computed and
       persisted across their two consumers,
       ``dedup.lsh_admission_from_bands`` (one index SCAN, never a
@@ -296,6 +296,7 @@ def neardup_ingest_foreach_batch(
     from mrjob_spark.operators.dedup import (
         lsh_admission_from_bands,
         lsh_admission_local,
+        minhash_arrow,
         minhash_band_rows,
     )
     from mrjob_spark.sources import collect_bounded, local_frame
@@ -316,9 +317,7 @@ def neardup_ingest_foreach_batch(
                 bands = materialize(minhash_band_rows(docs, id_col, text_col))
                 verdicts = lsh_admission_from_bands(bands, hist)
             else:
-                table = minhash_band_rows(
-                    local_frame(spark, local), id_col, text_col
-                ).toArrow()
+                table = minhash_arrow(local, "bands")
                 hits = hist.where(_in_list(
                     "band_hash", table.column("band_hash").unique())
                 ).toArrow()

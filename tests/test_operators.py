@@ -163,10 +163,10 @@ def test_minhash_bucket_cap_drops_hot_family_keeps_rest(spark):
 
 
 def test_minhash_band_rows_rebuilds_no_constant_expressions(spark):
-    """The 64 affine-min aggregates and 16 band structs are built once
-    per JVM gateway: a repeated ``minhash_band_rows`` call (one per
-    admission micro-batch) pays only its own plan, not the ~7,000 py4j
-    round trips of rebuilding the constant trees."""
+    """A ``minhash_band_rows`` call (one per admission micro-batch on
+    the distributed path) builds only its own small plan: the hashing
+    is one Python kernel, not ~7,000 py4j round trips of constant
+    expression trees."""
     from mrjob_spark.operators.dedup import minhash_band_rows
 
     docs = spark.createDataFrame(
@@ -217,6 +217,119 @@ def test_independent_band_row_frames_join_like_the_oracle(spark, duck, sf_dir):
         WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1"""
     ).fetchall())
     assert want and got == want
+
+
+#: texts whose lowering, slicing or encoding differs from plain ASCII
+EDGE_TEXTS = [
+    None, "", "short", "x" * 8, "İstanbul", "ΟΔΟΣ", "ΟΔΟΣ ΣΑΣ οδός",
+    "👩\u200d👩\u200d👧\u200d👦 family 👨\u200d👩\u200d👧 zwj emoji",
+    "日本語のテキスト、中文文本", "ＦＵＬＬ ｗｉｄｔｈ ＡＢＣ",
+    "Unicode 14 capitals: \u2c2f \ua7c0 \U00010570 stay upper in SQL",
+]
+
+
+def _docs_with_edge_texts(sf_dir):
+    """The sf0.001 documents plus :data:`EDGE_TEXTS` as an Arrow table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet",
+                         columns=["doc_id", "text"])
+    first = max(docs.column("doc_id").to_pylist()) + 1
+    edge = pa.table({
+        "doc_id": pa.array(range(first, first + len(EDGE_TEXTS)),
+                           docs.schema.field("doc_id").type),
+        "text": pa.array(EDGE_TEXTS, pa.string()),
+    })
+    return pa.concat_tables([docs, edge])
+
+
+def _sql_twin(table, select):
+    """``select`` over ``sql_band_rows_cte`` on ``table`` in DuckDB."""
+    import duckdb
+
+    from mrjob_spark.operators.dedup import sql_band_rows_cte
+
+    con = duckdb.connect()
+    con.register("documents", table)
+    try:
+        return con.execute(
+            "WITH " + sql_band_rows_cte("documents") + " " + select
+        ).fetchall()
+    finally:
+        con.close()
+
+
+def test_minhash_band_rows_match_the_sql_twin_row_for_row(spark, sf_dir):
+    """The kernel's band rows equal DuckDB's band CTE's, row for row, on
+    the fixture documents and on null, empty, short and non-ASCII texts
+    (a lowering that changes length, a final sigma, astral ZWJ
+    sequences, CJK and full-width letters, capitals newer than the SQL
+    engine's case tables)."""
+    from mrjob_spark.operators.dedup import minhash_band_rows
+
+    table = _docs_with_edge_texts(sf_dir)
+    got = sorted(
+        tuple(r) for r in minhash_band_rows(
+            spark.createDataFrame(table), "doc_id", "text").collect())
+    want = sorted(_sql_twin(
+        table, "SELECT doc_id, band_idx, band_hash FROM bands"))
+    assert len(got) == 16 * table.num_rows
+    assert got == want
+
+
+def test_minhash_signatures_match_the_sql_twin(spark, sf_dir):
+    """``m0..m63`` equal the CTE's ``sig``; a null text's are all null."""
+    from mrjob_spark.operators.dedup import minhash_signatures
+
+    table = _docs_with_edge_texts(sf_dir)
+    got = sorted(
+        tuple(r) for r in minhash_signatures(
+            spark.createDataFrame(table), "doc_id", "text").collect())
+    want = sorted(_sql_twin(table, "SELECT * FROM sig"))
+    assert got == want
+    assert any(r[1:] == (None,) * 64 for r in got)
+
+
+def test_minhash_kernel_chunks_are_invisible(monkeypatch):
+    """One long document folded in chunks of a few shingles gives the
+    same signature, bands and shingle set as the default chunk."""
+    import pyarrow as pa
+
+    from mrjob_spark.operators import dedup
+
+    text = "the quick brown fox jumps over a lazy dog near ΟΔΟΣ İ " * 40
+    ascii_text = text.encode("ascii", "ignore").decode()
+    table = pa.table({"doc_id": [1, 2], "text": [text, ascii_text]})
+
+    def run():
+        return [dedup.minhash_arrow(table, out).to_pylist()
+                for out in ("signatures", "bands", "sets")]
+
+    default = run()
+    monkeypatch.setattr(dedup, "_CHUNK", 7)
+    assert run() == default
+
+
+def test_minhash_lsh_pairs_drops_null_text_pairs(spark):
+    """Two null texts share all their md5('') bands but have no
+    shingles: the pair's Jaccard is 0/0, which ANSI mode raised as
+    DIVIDE_BY_ZERO for the whole job. The pair is dropped, as the SQL
+    twin drops it."""
+    import duckdb
+
+    from mrjob_spark.operators.dedup import sql_minhash_lsh_pairs
+
+    rows = [(1, None), (2, None),
+            (3, "the quick brown fox jumps over the lazy dog"), (4, "")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = minhash_lsh_pairs(docs, "doc_id", "text").collect()
+    con = duckdb.connect()
+    con.register("documents", docs.toArrow())
+    want = con.execute(sql_minhash_lsh_pairs()).fetchall()
+    con.close()
+    assert sorted(tuple(r) for r in got) == sorted(want)
+    assert all({1, 2} != {r[0], r[1]} for r in got)
 
 
 def test_simhash_near_dupes_share_fingerprint_bits(spark):
@@ -1028,6 +1141,31 @@ def test_pq_zero_norm_vector_drops_explicitly(spark, vec_corpus):
     ).collect()
     assert len(res) == 5
     assert all(r["neighbor_id"] != 9999 for r in res)
+
+
+def test_zero_vector_cosine_is_null_in_spark_and_its_sql_twin(spark):
+    """A zero vector's cosine is null on both engines: Spark's guarded
+    ``cosine_similarity`` and the twins' ``sql_cosine`` (DuckDB's bare
+    ``list_cosine_similarity`` gives −1.0). Checked through the exact
+    top-k query, whose twin ranks every neighbor's cosine."""
+    import duckdb
+
+    from mrjob_spark.queries import REGISTRY
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 2.0, 2.0], 0), (2, [0.0, 0.0, 0.0], 0),
+         (3, [2.0, 1.0, 2.0], 0), (4, [-1.0, 0.5, 0.0], 0)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    got = brute_force_topk(emb, emb, k=5).select(
+        "query_id", "neighbor_id", "cosine",
+        F.col("rank").cast("long")).collect()
+    con = duckdb.connect()
+    con.register("embeddings", emb.toArrow())
+    want = con.execute(REGISTRY["l3_knn_bruteforce"].sql).fetchall()
+    con.close()
+    assert sorted(tuple(r) for r in got) == sorted(want)
+    assert sum(r[2] is None for r in want) == 6
 
 
 def test_paragraph_dedup_oracle_survives_huge_and_negative_doc_ids():

@@ -1329,10 +1329,10 @@ def test_ingest_paths_agree_row_for_row(
 def test_ingest_runs_at_most_six_jobs_per_micro_batch(
         spark, tmp_path, sf_dir, kind):
     """A small micro-batch is decided on the driver: one bounded
-    collect, one index probe and two writes (plus the band rows'
-    shuffle on the near-dup path), at most six Spark jobs. The
-    distributed operators ran 15 (bands) and 14 (cells)."""
+    collect, one index probe and two writes, at most four Spark jobs
+    (the near-dup path hashes the collected documents with no job).
+    The distributed operators ran 15 (bands) and 14 (cells)."""
     name = f"ingest_jobs_{kind}"
     _admit_one_micro_batch(spark, tmp_path, sf_dir, kind, name)
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(name)
-    assert 0 < len(jobs) <= 6, len(jobs)
+    assert 0 < len(jobs) <= 4, len(jobs)
