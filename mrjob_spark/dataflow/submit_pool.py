@@ -50,6 +50,7 @@ from __future__ import annotations
 import atexit
 import json
 import os
+import signal
 import subprocess
 import tempfile
 import threading
@@ -132,6 +133,10 @@ if __name__ == "__main__":
 #: this bound.
 _STARTUP_TIMEOUT = 120.0
 
+#: default bound on one pooled submission; past it the host is killed
+#: and the caller falls back to a one-shot ``spark-submit``
+_SUBMIT_TIMEOUT = 600.0
+
 
 class _HostDied(RuntimeError):
     """The host process went away (or timed out) mid-request; the
@@ -140,6 +145,7 @@ class _HostDied(RuntimeError):
 
 class _PoolClient:
     def __init__(self, cmd_prefix: tuple):
+        self._key = cmd_prefix
         self._scratch = tempfile.mkdtemp(prefix="mrjob_spark_submit_pool_")
         host_py = os.path.join(self._scratch, "submit_pool_host.py")
         with open(host_py, "w") as fh:
@@ -155,6 +161,9 @@ class _PoolClient:
             stdin=subprocess.DEVNULL,
             stdout=self._out_fh,
             stderr=self._err_fh,
+            # its own process group, so that a kill reaches the Python
+            # app that spark-submit's JVM starts as well
+            start_new_session=True,
         )
         ready = os.path.join(self._scratch, "ready")
         deadline = time.monotonic() + _STARTUP_TIMEOUT
@@ -172,11 +181,15 @@ class _PoolClient:
     def alive(self) -> bool:
         return self._proc.poll() is None
 
-    def run(self, script: str, args: list, timeout: float = 600.0):
+    def run(self, script: str, args: list, timeout: float | None = None):
         """Submit one script execution; returns ``(reply_dict, stdout,
         stderr)`` where stdout/stderr are the host-output slices this
         request produced. Raises :class:`_HostDied` if the host process
-        disappears (caller falls back to one-shot)."""
+        disappears or the request outlives ``timeout`` seconds (default
+        :data:`_SUBMIT_TIMEOUT`); the caller then falls back to
+        one-shot."""
+        if timeout is None:
+            timeout = _SUBMIT_TIMEOUT
         with self._lock:
             self._seq += 1
             reply_path = os.path.join(self._scratch, "rep_%d.json" % self._seq)
@@ -198,6 +211,7 @@ class _PoolClient:
                         % self._proc.returncode
                     )
                 if time.monotonic() > deadline:
+                    self._abandon()
                     raise _HostDied("pooled submission timed out")
                 time.sleep(0.02)
             with open(reply_path) as fh:
@@ -206,6 +220,21 @@ class _PoolClient:
             out = self._read_from(self._out_path, out_at)
             err = self._read_from(self._err_path, err_at)
             return reply, out, err
+
+    def _abandon(self) -> None:
+        """Kill the host mid-request and stop pooling its command line.
+        The host may still be running the step against the step's
+        OUTPUT, so it must be gone before the caller runs the step
+        again one-shot; later steps must not queue behind it either."""
+        try:
+            os.killpg(self._proc.pid, signal.SIGKILL)
+        except OSError:
+            pass
+        self._proc.wait()
+        self.close()
+        with _POOL_LOCK:
+            if _POOL.get(self._key) is self:
+                _POOL[self._key] = None
 
     @staticmethod
     def _read_from(path: str, offset: int) -> str:

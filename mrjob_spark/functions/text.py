@@ -41,9 +41,20 @@ def bind1(col: Column, f) -> Column:
     return F.element_at(F.transform(F.array(col), f), 1)
 
 
+def simple_lower(col: Column) -> Column:
+    """SQL's ``lower``, the simple one-to-one case mapping. Spark's
+    ``lower`` is Java's full mapping, which differs on exactly two code
+    points: U+0130 lowers to two code points, and a word-final capital
+    sigma to ς. Translating those two first gives DuckDB's ``lower``
+    (Java 17 and DuckDB share Unicode 13's case tables);
+    ``operators/dedup.py:_SIMPLE_LOWER`` is the same mapping in
+    Python."""
+    return F.lower(F.translate(col, "\u0130\u03a3", "i\u03c3"))
+
+
 def tokens(col: Column) -> Column:
     """lowercase word tokens, empty strings removed → array<string>."""
-    arr = F.split(F.lower(col), TOKEN_SPLIT_RE)
+    arr = F.split(simple_lower(col), TOKEN_SPLIT_RE)
     return F.filter(arr, lambda x: x != "")
 
 
@@ -54,7 +65,7 @@ def distinct_tokens(col: Column) -> Column:
 def normalize_text(col: Column) -> Column:
     """Canonical form for normalized dedup: lowercase, collapse all
     non-alphanumeric runs to single spaces, trim."""
-    return F.trim(F.regexp_replace(F.lower(col), "[^a-z0-9]+", " "))
+    return F.trim(F.regexp_replace(simple_lower(col), "[^a-z0-9]+", " "))
 
 
 def char_shingles(text_col: Column, n: int = 8) -> Column:
@@ -67,7 +78,7 @@ def char_shingles(text_col: Column, n: int = 8) -> Column:
     # lower(text) is bound once per row (bind1): captured directly in the
     # per-index lambda it would be re-lowered once per shingle, O(len^2)
     return bind1(
-        F.lower(text_col),
+        simple_lower(text_col),
         lambda lowered: F.transform(
             F.sequence(
                 F.lit(1), F.greatest(F.length(lowered) - (n - 1), F.lit(1))

@@ -574,7 +574,9 @@ def l2_minhash_lsh_capped(spark, sf_dir):
     the oracle applies the identical cutoff (HAVING count(*) <= 32), so a
     divergence in WHICH buckets are dropped flips the driver hash.
     Reference parity: mrjob has no LSH; this is the scale path the
-    100 TB dedup contract requires (run exact dedup first, cap buckets)."""
+    100 TB dedup contract requires (run exact dedup first, cap buckets).
+    Both regimes of the operator apply the cap: the driver path (up to
+    ``dedup._DRIVER_DOCS`` documents) and the distributed plan."""
     t = Tables(spark, sf_dir)
     return minhash_lsh_pairs(
         t.documents, "doc_id", "text", threshold=0.6, max_bucket_size=32
@@ -1046,7 +1048,9 @@ def l1_dedup_clusters_capped(spark, sf_dir):
     the same WITH RECURSIVE closure over the identically-capped pair SQL —
     a divergence in either the cap or the clustering flips the
     hash. The uncapped twin stays registered as the correctness
-    baseline."""
+    baseline. Like it, a corpus under ``dedup._DRIVER_DOCS`` documents
+    gets its pairs from the driver and its labels from a union-find
+    there."""
     from mrjob_spark.operators.graph import connected_components
 
     t = Tables(spark, sf_dir)

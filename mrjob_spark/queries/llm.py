@@ -140,8 +140,12 @@ def l1_incremental_dedup(spark, sf_dir):
        baseline_of="l2_minhash_lsh_capped")
 def l2_minhash_lsh_pairs(spark, sf_dir):
     """MinHash+LSH near-dup pairs, exact-Jaccard-verified. The whole
-    pipeline (shingle → minhash → band → bucket join → verify) is portable
-    column math, so even this approximate operator is oracle-checked."""
+    pipeline (shingle → minhash → band → bucket → verify) has a DuckDB
+    twin, so even this approximate operator is oracle-checked. Its 500
+    fixture documents sit under ``dedup._DRIVER_DOCS``: the pairs are
+    found on the driver in one job, and the distributed plan (band
+    bucket shuffle, candidate persist, semi-join, verification join)
+    runs above the bound."""
     t = Tables(spark, sf_dir)
     return minhash_lsh_pairs(t.documents, "doc_id", "text", threshold=0.6)
 
@@ -172,7 +176,8 @@ def l1_dedup_clusters(spark, sf_dir):
     O(log² n) rounds whatever the diameter. Still oracle-checked: the
     DuckDB twin is a WITH RECURSIVE transitive closure over the SAME pair
     SQL, and both engines must land on identical (doc, min-reachable-id)
-    labels."""
+    labels. Below ``dedup._DRIVER_DOCS`` documents the pairs themselves
+    come from the driver, as a local frame."""
     t = Tables(spark, sf_dir)
     pairs = minhash_lsh_pairs(t.documents, "doc_id", "text", threshold=0.6)
     cc = connected_components(pairs, src="doc_a", dst="doc_b")

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from mrjob_spark.operators import dedup
 from mrjob_spark.operators.asof import asof_join
 from mrjob_spark.operators.dedup import (
     exact_dedup,
@@ -107,7 +108,25 @@ def test_exact_and_normalized_dedup(spark):
     assert {(r["keep_id"], r["n_copies"]) for r in norm.collect()} == {(1, 3), (4, 1)}
 
 
-def test_minhash_lsh_finds_near_dupes(spark):
+#: ``_DRIVER_DOCS`` per path: the default bound keeps these small corpora
+#: on the driver, a bound of 0 forces the distributed plan
+LSH_PATHS = {"driver": dedup._DRIVER_DOCS, "distributed": 0}
+
+
+def _lsh_pairs_on_both_paths(monkeypatch, docs, **kw):
+    """``{path: {(doc_a, doc_b)}}`` of ``minhash_lsh_pairs`` from each
+    regime."""
+    out = {}
+    for path, bound in LSH_PATHS.items():
+        monkeypatch.setattr(dedup, "_DRIVER_DOCS", bound)
+        out[path] = {
+            (r["doc_a"], r["doc_b"])
+            for r in minhash_lsh_pairs(docs, "doc_id", "text", **kw).collect()
+        }
+    return out
+
+
+def test_minhash_lsh_finds_near_dupes(spark, monkeypatch):
     base = "the quick brown fox jumps over the lazy dog " * 6
     docs = spark.createDataFrame(
         [
@@ -117,49 +136,35 @@ def test_minhash_lsh_finds_near_dupes(spark):
                                "query engines and shuffle planning " * 5),
         ]
     )
-    pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5).collect()
-    }
-    assert (1, 2) in pairs
-    assert all(3 not in p for p in pairs)
+    for path, pairs in _lsh_pairs_on_both_paths(
+            monkeypatch, docs, threshold=0.5).items():
+        assert (1, 2) in pairs, path
+        assert all(3 not in p for p in pairs), path
 
 
-def test_minhash_bucket_cap_drops_hot_family_keeps_rest(spark):
+def test_minhash_bucket_cap_drops_hot_family_keeps_rest(spark, monkeypatch):
     # 40 exact copies of one template flood every band bucket they touch
     # (each bucket holds all 40); an unrelated near-dup pair lives in its
     # own small buckets. Cap=8 must kill the template family's 780 pairs
-    # while leaving the small-bucket pair untouched.
+    # while leaving the small-bucket pair untouched. Both regimes.
     template = "standard legal boilerplate disclaimer text " * 8
     base = "the quick brown fox jumps over the lazy dog " * 6
     rows = [Row(doc_id=i, text=template) for i in range(100, 140)]
     rows += [Row(doc_id=1, text=base), Row(doc_id=2, text=base + "suffix!")]
     docs = spark.createDataFrame(rows)
 
-    capped = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.5, max_bucket_size=8
-        ).collect()
-    }
-    assert (1, 2) in capped
-    assert all(a < 100 and b < 100 for a, b in capped), capped
-
-    # a cap at least as large as every bucket is a no-op vs uncapped
-    uncapped = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.5
-        ).collect()
-    }
-    huge_cap = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", threshold=0.5, max_bucket_size=10_000
-        ).collect()
-    }
-    assert huge_cap == uncapped
-    assert (100, 101) in uncapped  # the family the cap removed is real
+    capped = _lsh_pairs_on_both_paths(
+        monkeypatch, docs, threshold=0.5, max_bucket_size=8)
+    uncapped = _lsh_pairs_on_both_paths(monkeypatch, docs, threshold=0.5)
+    huge_cap = _lsh_pairs_on_both_paths(
+        monkeypatch, docs, threshold=0.5, max_bucket_size=10_000)
+    for path in LSH_PATHS:
+        assert (1, 2) in capped[path], path
+        assert all(a < 100 and b < 100 for a, b in capped[path]), path
+        # a cap at least as large as every bucket is a no-op vs uncapped
+        assert huge_cap[path] == uncapped[path], path
+        # the family the cap removed is real
+        assert (100, 101) in uncapped[path], path
 
 
 def test_minhash_band_rows_rebuilds_no_constant_expressions(spark):
@@ -311,25 +316,170 @@ def test_minhash_kernel_chunks_are_invisible(monkeypatch):
     assert run() == default
 
 
-def test_minhash_lsh_pairs_drops_null_text_pairs(spark):
-    """Two null texts share all their md5('') bands but have no
-    shingles: the pair's Jaccard is 0/0, which ANSI mode raised as
-    DIVIDE_BY_ZERO for the whole job. The pair is dropped, as the SQL
-    twin drops it."""
+def _sql_lsh_pairs(table, **kw):
+    """``sql_minhash_lsh_pairs(**kw)`` over ``table`` in DuckDB."""
     import duckdb
 
     from mrjob_spark.operators.dedup import sql_minhash_lsh_pairs
 
+    con = duckdb.connect()
+    con.register("documents", table)
+    try:
+        return sorted(con.execute(sql_minhash_lsh_pairs(**kw)).fetchall())
+    finally:
+        con.close()
+
+
+def test_minhash_lsh_pairs_drops_null_text_pairs(spark, monkeypatch):
+    """Two null texts share all their md5('') bands but have no
+    shingles: the pair's Jaccard is 0/0, which ANSI mode raised as
+    DIVIDE_BY_ZERO for the whole job. The pair is dropped, as the SQL
+    twin drops it. Both regimes."""
     rows = [(1, None), (2, None),
             (3, "the quick brown fox jumps over the lazy dog"), (4, "")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = minhash_lsh_pairs(docs, "doc_id", "text").collect()
+    want = _sql_lsh_pairs(docs.toArrow())
+    for path, bound in LSH_PATHS.items():
+        monkeypatch.setattr(dedup, "_DRIVER_DOCS", bound)
+        got = minhash_lsh_pairs(docs, "doc_id", "text").collect()
+        assert sorted(tuple(r) for r in got) == want, path
+        assert all({1, 2} != {r[0], r[1]} for r in got), path
+
+
+def _lsh_rows_and_schema(spark, table, **kw):
+    """``(sorted rows, schema)`` of ``minhash_lsh_pairs`` over ``table``."""
+    df = minhash_lsh_pairs(
+        spark.createDataFrame(table), "doc_id", "text", **kw)
+    return sorted(tuple(r) for r in df.collect()), df.schema
+
+
+def test_lsh_pair_paths_agree_row_for_row(spark, sf_dir, monkeypatch):
+    """The driver path, the distributed path and the SQL twin return the
+    same pairs, and both paths the same schema, on the fixture documents
+    plus null texts, an empty and a short text, a repeated id with two
+    different texts and a null id whose text is a near-dup of another
+    document; uncapped and capped."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet",
+                         columns=["doc_id", "text"])
+    first = max(docs.column("doc_id").to_pylist()) + 1
+    base = "the quick brown fox jumps over the lazy dog " * 6
+    extra = pa.table({
+        "doc_id": pa.array(
+            [first, first + 1, first + 2, first + 3, first + 4, first + 4,
+             None, first + 5, first + 6], docs.schema.field("doc_id").type),
+        "text": [None, None, "", "short", "one text of a repeated id",
+                 "another text of the repeated id", base + "!", base,
+                 base + "?"],
+    })
+    table = pa.concat_tables([docs, extra])
+    for kw in ({}, {"max_bucket_size": 8}):
+        got = {}
+        for path, bound in LSH_PATHS.items():
+            monkeypatch.setattr(dedup, "_DRIVER_DOCS", bound)
+            got[path] = _lsh_rows_and_schema(spark, table, **kw)
+        want = _sql_lsh_pairs(table, **kw)
+        assert (first + 5, first + 6) in {r[:2] for r in want}
+        assert got["driver"] == got["distributed"], kw
+        assert got["driver"][0] == want, kw
+
+
+def test_lsh_pair_paths_agree_on_a_repeated_id(spark, monkeypatch):
+    """Each row is one document on both paths: a repeated id whose two
+    texts are near-dups of each other and of a third document pairs row
+    by row, a self-pair included. (The SQL twin groups the rows of an id
+    into one document instead, so it is not the reference here.)"""
+    import pyarrow as pa
+
+    base = "the quick brown fox jumps over the lazy dog " * 6
+    table = pa.table({
+        "doc_id": pa.array([1, 1, 2, 3], pa.int64()),
+        "text": [base, base + "!", base + "?", "an unrelated document"],
+    })
+    got = {}
+    for path, bound in LSH_PATHS.items():
+        monkeypatch.setattr(dedup, "_DRIVER_DOCS", bound)
+        got[path] = _lsh_rows_and_schema(spark, table)
+    assert {r[:2] for r in got["driver"][0]} == {(1, 1), (1, 2)}
+    assert got["driver"] == got["distributed"]
+
+
+def test_lsh_pairs_over_the_pair_budget_take_the_distributed_path(
+        spark, sf_dir, monkeypatch):
+    """Candidates beyond the driver's pair budget (``graph._DRIVER_EDGES``,
+    made small here) send the operator to its distributed plan, which
+    returns the same pairs."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    want = sorted(tuple(r) for r in minhash_lsh_pairs(
+        docs, "doc_id", "text").collect())
+    assert len(want) > 3
+    seen = []
+    local = dedup.lsh_pairs_local
+
+    def spy(*a, **k):
+        seen.append(local(*a, **k))
+        return seen[-1]
+
+    monkeypatch.setattr(dedup, "lsh_pairs_local", spy)
+    monkeypatch.setattr(graph, "_DRIVER_EDGES", 3)
+    got = minhash_lsh_pairs(docs, "doc_id", "text")
+    assert seen == [None]
+    assert sorted(tuple(r) for r in got.collect()) == want
+    # the distributed plan's persisted candidate set, not a local frame
+    assert got._mrjob_spark_persisted[0].is_cached
+    dedup.unpersist_intermediates(got)
+
+
+def test_minhash_lsh_pairs_runs_one_job_below_the_bound(spark, sf_dir):
+    """Below ``_DRIVER_DOCS`` the operator and a collect of its pairs run
+    one Spark job, the bounded collect of the source rows. The
+    distributed plan ran 12."""
+    name = "lsh_pairs_jobs"
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        rows = minhash_lsh_pairs(docs, "doc_id", "text").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows
+    jobs = sc.statusTracker().getJobIdsForGroup(name)
+    assert 0 < len(jobs) <= 1, len(jobs)
+
+
+def test_text_functions_lower_like_the_sql_twins(spark):
+    """``char_shingles``, ``tokens`` and ``normalize_text`` lower as
+    DuckDB's ``lower`` does: U+0130 and a word-final capital sigma, where
+    Java's full case mapping differs from SQL's simple one, included."""
+    import duckdb
+
+    from mrjob_spark.functions.text import (
+        char_shingles,
+        normalize_text,
+        sql_normalize_text,
+        sql_tokens,
+        tokens,
+    )
+
+    texts = ["İstanbul", "İİ", "ΟΔΟΣ ΣΑΣ οδός", "Plain ASCII Text, 42"]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    got = [tuple(r) for r in df.select(
+        "t", char_shingles(F.col("t")), tokens(F.col("t")),
+        normalize_text(F.col("t"))).collect()]
     con = duckdb.connect()
-    con.register("documents", docs.toArrow())
-    want = con.execute(sql_minhash_lsh_pairs()).fetchall()
+    con.register("texts", df.toArrow())
+    want = con.execute(f"""
+        SELECT t,
+               list_transform(
+                   generate_series(1, greatest(length(t) - 7, 1)),
+                   i -> substr(lower(t), i, 8)),
+               {sql_tokens('t')}, {sql_normalize_text('t')}
+        FROM texts""").fetchall()
     con.close()
-    assert sorted(tuple(r) for r in got) == sorted(want)
-    assert all({1, 2} != {r[0], r[1]} for r in got)
+    assert sorted(got) == sorted(want)
 
 
 def test_simhash_near_dupes_share_fingerprint_bits(spark):
@@ -690,13 +840,16 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
     assert written
 
 
-def test_minhash_lsh_pairs_storage_flat_and_releasable(spark):
+def test_minhash_lsh_pairs_storage_flat_and_releasable(spark, monkeypatch):
     # VERDICT r2 #4: repeated invocations in a long-lived session must not
     # accrete storage. The CacheManager dedups identical plans (invocation 2
     # reuses invocation 1's entries), and the enclosing scope releases
-    # them deterministically.
+    # them deterministically. Forced onto the distributed plan, the one
+    # that persists (this corpus sits far under the driver bound).
     from mrjob_spark.materialize import scope
     from mrjob_spark.operators.dedup import minhash_lsh_pairs
+
+    monkeypatch.setattr(dedup, "_DRIVER_DOCS", 0)
 
     def cached_ids():
         info = spark.sparkContext._jsc.sc().getRDDStorageInfo()
@@ -1652,12 +1805,15 @@ def test_scope_frees_every_intermediate_of_a_query(
         spark, sf_dir, name, monkeypatch):
     """Build and noop-write a registry query inside one scope: on exit no
     persisted RDD or CacheManager entry of its own is left behind,
-    checkpoint generations included. The clustering queries are forced
-    onto connected components' distributed path, the one that
-    checkpoints (their fixture graphs sit far under the driver bound)."""
+    checkpoint generations included. The pair and clustering queries are
+    forced onto the distributed paths of the pair operator and of
+    connected components, the ones that persist and checkpoint (their
+    fixtures sit far under both driver bounds)."""
     from mrjob_spark import queries
     from mrjob_spark.materialize import scope
 
+    if name.startswith(("l1_dedup_clusters", "l2_minhash_lsh")):
+        monkeypatch.setattr(dedup, "_DRIVER_DOCS", 0)
     if name.startswith("l1_dedup_clusters"):
         monkeypatch.setattr(graph, "_DRIVER_EDGES", 0)
 

@@ -76,3 +76,62 @@ def test_host_exits_on_shutdown_marker(tmp_path):
     client.close()
     assert os.path.exists(os.path.join(scratch, "shutdown"))
     assert client._proc.poll() is not None
+
+
+def test_timed_out_submission_is_killed_before_the_one_shot_fallback(
+        spark, tmp_path, monkeypatch):
+    """A pooled submission that outlives its timeout falls back to the
+    one-shot ``spark-submit``. The host may still be running the step at
+    that moment, so it is killed first and its command line is no longer
+    pooled: the step's side effect happens exactly once."""
+    import time
+
+    from mrjob_spark.dataflow import SparkMRJob, SparkScriptStep
+
+    # a spark-submit that drops its options and runs the app in Python
+    fake = tmp_path / "spark-submit"
+    fake.write_text(
+        f"#!{sys.executable}\n"
+        "import os, sys\n"
+        "args = sys.argv[1:]\n"
+        "while args[0].startswith('--'):\n"
+        "    args = args[2:]\n"
+        "os.execv(sys.executable, [sys.executable] + args)\n"
+    )
+    fake.chmod(0o755)
+    monkeypatch.setenv("PATH", f"{tmp_path}{os.pathsep}{os.environ['PATH']}")
+    marker = tmp_path / "marker.txt"
+    script = tmp_path / "slow_step.py"
+    script.write_text(
+        "import sys, time\n"
+        "time.sleep(1.0)\n"
+        "with open(sys.argv[1], 'a') as fh:\n"
+        "    fh.write('ran\\n')\n"
+    )
+
+    class MRSlowStep(SparkMRJob):
+        def steps(self):
+            return [SparkScriptStep(script=str(script), args=[str(marker)])]
+
+    key = (str(fake), "--master", spark.conf.get("spark.master"))
+    client = submit_pool.get_client(key)
+    assert client is not None
+    pid = client._proc.pid
+    monkeypatch.setattr(submit_pool, "_SUBMIT_TIMEOUT", 0.2)
+    inp = tmp_path / "in.txt"
+    inp.write_text("x\n")
+    try:
+        MRSlowStep().make_runner(spark, input_paths=[str(inp)]).run()
+        # long enough for a surviving host to finish its copy of the step
+        time.sleep(1.5)
+        assert marker.read_text().splitlines() == ["ran"]
+        assert submit_pool._POOL[key] is None
+        try:
+            os.kill(pid, 0)
+        except ProcessLookupError:
+            pass
+        else:
+            raise AssertionError(f"submit host {pid} still running")
+    finally:
+        client.close()
+        submit_pool._POOL.pop(key, None)
